@@ -452,18 +452,21 @@ def _scoped_shuffle_partitions(spark, n: int):
     loop at sf0.1: 4.53 -> 3.12 s median of 3 interleaved reps,
     fixpoint identical). At real cardinality the formula hits the
     session cap (n == session setting) and AQE stays on, so skew/
-    coalesce handling at scale is untouched. NOTE: mutates shared
-    session conf — safe only while queries execute serially (the
-    driver/bench contract); revisit before any concurrent-query
-    feature."""
+    coalesce handling at scale is untouched. The log-round doubling
+    loops (queries/advanced_ops.py) share the same per-round shape and
+    use this scope too. NOTE: mutates shared session conf — safe only
+    while queries execute serially (the driver/bench contract); revisit
+    before any concurrent-query feature."""
     p_key = "spark.sql.shuffle.partitions"
     a_key = "spark.sql.adaptive.enabled"
+    # read both old values before changing anything, and set inside
+    # the try: a set that fails half-way still restores both
     old_p = spark.conf.get(p_key)
     old_a = spark.conf.get(a_key)
-    spark.conf.set(p_key, str(n))
-    if n < int(old_p):
-        spark.conf.set(a_key, "false")
     try:
+        spark.conf.set(p_key, str(n))
+        if n < int(old_p):
+            spark.conf.set(a_key, "false")
         yield
     finally:
         spark.conf.set(p_key, old_p)

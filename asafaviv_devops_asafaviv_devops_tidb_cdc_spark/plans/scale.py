@@ -127,8 +127,8 @@ def streaming_conf(state_bytes: int, total_cores: int) -> dict[str, str]:
     the foreachBatch maintainers). Shuffle partitions are sized DOWN
     to the state volume: each partition is one state store instance
     paying a per-batch commit, so thousands of near-empty stores are
-    pure fixed overhead (measured ~2x on the replay harness — see
-    streaming/ingest.py::scoped_shuffle_partitions)."""
+    pure fixed overhead (measured ~2x on the replay harness — every
+    drain runs in that sized-down domain, see streaming/ingest.py::drain)."""
     parts = int(
         min(
             max(state_bytes // TARGET_SHUFFLE_PARTITION_BYTES + 1, total_cores),

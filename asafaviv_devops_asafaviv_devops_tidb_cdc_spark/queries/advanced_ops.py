@@ -18,8 +18,6 @@ They extend the mandated north-star surface (SURVEY §2.11/§2.12).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import kmv as KMV, similarity
@@ -158,9 +156,9 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_stream_kmv", oracle=None)  # batch oracle attached below
 def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E27b — KMV sketch STREAM TWIN: each micro-batch folds its local
-    per-group bottom-K (<= groups x K tiny rows, an idempotent
-    ``epoch=<id>`` partial — a retried batch overwrites its own
-    partial) and serving takes bottom-K over the union of partials:
+    per-group bottom-K (<= groups x K tiny rows, an epoch partial —
+    streaming/delta.py::drain_partials) and serving takes bottom-K
+    over the union of partials:
     because the sketch is a commutative idempotent bounded monoid the
     streamed sketch is EXACTLY the batch sketch and hash-matches
     q_kmv_distinct's oracle. This is the always-current distinct
@@ -343,8 +341,8 @@ def q_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W15b — gap-fill STREAM TWIN: the hourly (type, hr) cent-sums
     are SUM-DECOMPOSABLE, so each micro-batch folds one tiny
-    per-(type, hr) partial (idempotent ``epoch=<id>`` — the
-    streaming/drift.py recipe) and serving sums the partials into the
+    per-(type, hr) partial (streaming/delta.py::drain_partials) and
+    serving sums the partials into the
     identical obs frame, then runs the SAME gapfill_series — the
     streamed densified dashboard hash-matches the batch SQL oracle
     exactly. This is how a live gap-filled chart actually deploys:
@@ -1469,8 +1467,8 @@ def q_dbscan_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X30b — OLS trend STREAM TWIN: daily cent-sums are
     SUM-DECOMPOSABLE, so each micro-batch folds one tiny per-(type,
-    day) partial (idempotent ``epoch=<id>`` — the streaming/drift.py
-    recipe) and serving sums the partials into the identical daily
+    day) partial (streaming/delta.py::drain_partials) and serving
+    sums the partials into the identical daily
     frame, then runs the SAME trend_from_daily — the live trend
     detector hash-matches the batch SQL oracle exactly. The regression
     recomputes over the bounded type x day grid each refresh; state
@@ -1881,29 +1879,6 @@ def _doubling_partitions(spark: SparkSession, approx_rows: int) -> int:
     return max(2, min(cur, approx_rows // 50_000 + 2))
 
 
-@contextmanager
-def _scoped_shuffle(spark: SparkSession, n: int):
-    """Same contract as functions/dedup._scoped_shuffle_partitions
-    (r16): a domain sized DOWN from the session setting means the data
-    is measured-small, so AQE is disabled inside the scope as well —
-    adaptive replanning of every tiny stage is pure driver overhead on
-    the log-round doubling loops (measured 1.45x on the web CC loop;
-    the doubling loops share the same per-round shape). At real
-    cardinality the formula hits the session cap and AQE stays on."""
-    p_key = "spark.sql.shuffle.partitions"
-    a_key = "spark.sql.adaptive.enabled"
-    old_p = spark.conf.get(p_key)
-    old_a = spark.conf.get(a_key)
-    spark.conf.set(p_key, str(n))
-    if n < int(old_p):
-        spark.conf.set(a_key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(p_key, old_p)
-        spark.conf.set(a_key, old_a)
-
-
 _HIERARCHY_DEPTH_ORACLE = f"""
 WITH RECURSIVE chain(node, cur, depth) AS (
   SELECT CAST(c_custkey AS BIGINT), CAST(c_custkey AS BIGINT), CAST(0 AS BIGINT)
@@ -1939,7 +1914,7 @@ def q_hierarchy_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     (node-consumer/index.js) has no recursive traversal; this is the
     classic warehouse org-chart / BOM-explosion shape over the same
     deterministic sha forest the oracle rebuilds with WITH RECURSIVE."""
-    from ..functions.dedup import reliable_checkpoint
+    from ..functions.dedup import _scoped_shuffle_partitions, reliable_checkpoint
 
     cust = load_table(spark, sf_dir, "customer")
     n_nodes = cust.count()  # driver scalar sizing the loop's shuffle domain
@@ -1978,7 +1953,7 @@ def q_hierarchy_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         _anc0.cast("long").alias("anc"),
         _d0.cast("long").alias("d"),
     )
-    with _scoped_shuffle(spark, _doubling_partitions(spark, n_nodes)):
+    with _scoped_shuffle_partitions(spark, _doubling_partitions(spark, n_nodes)):
         f = reliable_checkpoint(f, None)
         for _ in range(64):
             if f.filter(F.col("anc") != 0).limit(1).count() == 0:
@@ -2042,7 +2017,7 @@ def q_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB posture: rounds stay O(log log-depth)-few, per-round
     shuffles are pair-set-sized, and the depth histogram twin (X34)
     bounds avg_depth before anyone runs the closure."""
-    from ..functions.dedup import reliable_checkpoint
+    from ..functions.dedup import _scoped_shuffle_partitions, reliable_checkpoint
 
     cust = load_table(spark, sf_dir, "customer")
     nodes = cust.select(F.col("c_custkey").cast("long").alias("node"))
@@ -2068,7 +2043,7 @@ def q_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for leg in legs[1:]:
         pairs = pairs.unionByName(leg)
     pairs = pairs.distinct()
-    with _scoped_shuffle(
+    with _scoped_shuffle_partitions(
         spark, _doubling_partitions(spark, nodes.count() * 8)
     ):  # closure frame is ~n x avg_depth rows, not n
         pairs = reliable_checkpoint(pairs, None)

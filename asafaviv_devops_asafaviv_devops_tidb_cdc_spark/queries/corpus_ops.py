@@ -616,8 +616,8 @@ def q_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_stream_delta_agg", oracle=None)
 def q_stream_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 stream form — the retraction fold executed by a REAL
-    Structured Streaming query (foreachBatch partials, idempotent
-    epoch=<id> overwrite — streaming/delta.py). Deltas commute, so the
+    Structured Streaming query (epoch partials —
+    streaming/delta.py::drain_partials). Deltas commute, so the
     folded totals equal the batch q_delta_agg independent of batch
     boundaries; the oracle is attached right after this definition
     (same SQL text as q_delta_agg) and the driver hash-compares the

@@ -513,9 +513,9 @@ def drift_census(obs: DataFrame) -> DataFrame:
 @register("q_stream_event_drift", oracle=None)  # batch oracle attached below
 def q_stream_event_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift STREAM TWIN: per-micro-batch (day, type)
-    counts folded into idempotent ``epoch=<id>`` partials (counts are
-    sum-decomposable, so a retried batch overwrites its own partial
-    and never double-counts — the streaming/dq.py recipe); serving
+    counts folded into epoch partials (streaming/delta.py::
+    drain_partials; counts are sum-decomposable, so the partials add
+    up to the batch counts); serving
     sums the partials into the obs frame and runs the SAME
     drift_census as the batch query, so the streamed result
     hash-matches the batch SQL oracle exactly. This is how the

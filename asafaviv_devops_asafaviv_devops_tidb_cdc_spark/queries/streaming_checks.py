@@ -161,19 +161,16 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     src = _events_replay_src(spark, sf_dir)
     name = f"winagg_{abs(hash(sf_dir)) % 10_000_000}"
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            spark.readStream.schema(events.schema)
-            .parquet(src)
-            .groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        spark.readStream.schema(events.schema)
+        .parquet(src)
+        .groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
+        .agg(F.count("*").alias("n"))
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete"),
+    )
     return spark.sql(f"SELECT w.start AS window_start, event_type, n FROM {name}")
 
 
@@ -205,24 +202,19 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         _events_replay_src(spark, sf_dir)
     )
     name = f"sessions_{abs(hash(sf_dir)) % 10_000_000}"
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.groupBy(
-                F.session_window("ts", "30 minutes").alias("w"), "user_id"
-            )
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-                .cast("long")
-                .alias("total_value_cents"),
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    ingest.drain(
+        spark,
+        stream.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
+            .cast("long")
+            .alias("total_value_cents"),
         )
-        q.awaitTermination()
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete"),
+    )
     return spark.sql(
         f"SELECT user_id, w.start AS session_start, n_events, "
         f"total_value_cents FROM {name}"
@@ -278,17 +270,14 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 6 HOURS"))
         & (F.col("click_ts") <= F.col("purchase_ts")),
     )
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            joined.select("user_id", "click_ts", "purchase_ts")
-            .writeStream.format("parquet")
-            .option("path", str(base / "sink"))
-            .option("checkpointLocation", str(base / "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        joined.select("user_id", "click_ts", "purchase_ts")
+        .writeStream.format("parquet")
+        .option("path", str(base / "sink"))
+        .outputMode("append"),
+        str(base / "ckpt"),
+    )
     return spark.read.parquet(str(base / "sink")).select(
         "user_id", "click_ts", "purchase_ts"
     )
@@ -346,15 +335,11 @@ def q_stream_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ingest.resumable_workdir(sf_dir, "events", "alerts", "alerts-v2")
     stream_src = spark.readStream.schema(events.schema).parquet(src)
     out = alerts.sustained_alerts_stream(stream_src)
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", str(base / "sink"))
-            .option("checkpointLocation", str(base / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        out.writeStream.format("parquet").option("path", str(base / "sink")),
+        str(base / "ckpt"),
+    )
     sink = spark.read.parquet(str(base / "sink"))
     return sink.select(
         F.timestamp_millis(F.col("window_ms")).alias("window_start"),
@@ -644,22 +629,17 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     src = _events_replay_src(spark, sf_dir)
     name = f"topk_{abs(hash(sf_dir)) % 10_000_000}"
-    with ingest.scoped_shuffle_partitions(
-        spark, ingest.STREAM_SHUFFLE_PARTITIONS
-    ):
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n_events"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .groupBy("user_id")
+        .agg(F.count("*").alias("n_events"))
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete"),
+    )
     return (
         spark.table(name)
         .orderBy(F.desc("n_events"), "user_id")
@@ -734,23 +714,18 @@ def q_stream_late_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_interleaved,
     )
     name = f"latedrops_{abs(hash(sf_dir)) % 10_000_000}"
-    with ingest.scoped_shuffle_partitions(
-        spark, ingest.STREAM_SHUFFLE_PARTITIONS
-    ):
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-            .withWatermark("ts", "5 minutes")
-            .groupBy(F.window("ts", "1 minute").alias("w"))
-            .agg(F.count("*").alias("n"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+        .withWatermark("ts", "5 minutes")
+        .groupBy(F.window("ts", "1 minute").alias("w"))
+        .agg(F.count("*").alias("n"))
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append"),
+    )
     return spark.table(name).select(
         F.col("w.start").alias("window_start"),
         F.col("n").cast("long").alias("n"),

@@ -803,7 +803,6 @@ def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocations (provider-keyed workdir)."""
     from ..sources.artifact import input_fingerprint, materialized_path
     from ..streaming import delta as D
-    from ..streaming import ingest as I
     from ..streaming.ingest import resumable_workdir
 
     base = resumable_workdir(sf_dir, "documents", "manifest", "manifest-v2")
@@ -813,35 +812,23 @@ def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_fingerprint(sf_dir, "documents", "manifest-src-v1"),
         lambda dest: docs.repartition(6).write.mode("overwrite").parquet(dest),
     )
-    partials_dir = base / "partials"
-    ckpt = base / "ckpt"
+    partials_dir = str(base / "partials")
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )
-
-    def fold(batch_df, epoch_id):
-        # the SAME staging + census expressions as the batch writer
-        # (functions/sampling.py) — the twins cannot drift apart
-        (
-            SK.shard_census(SK.with_shard_cols(batch_df))
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with I.scoped_shuffle_partitions(spark, I.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    D.compact_with(spark, str(partials_dir), SK.fold_manifests)
-    return SK.manifest_select(
-        D.folded_with(spark, str(partials_dir), SK.fold_manifests)
+    # the SAME staging + census expressions as the batch writer
+    # (functions/sampling.py) — the twins cannot drift apart
+    D.drain_partials(
+        stream,
+        partials_dir,
+        str(base / "ckpt"),
+        lambda batch_df: SK.shard_census(SK.with_shard_cols(batch_df)),
+        fresh=False,
     )
+    D.compact_with(spark, partials_dir, SK.fold_manifests)
+    return SK.manifest_select(D.folded_with(spark, partials_dir, SK.fold_manifests))
 
 
 # every manifest stat folds commutatively, so the batch manifest's

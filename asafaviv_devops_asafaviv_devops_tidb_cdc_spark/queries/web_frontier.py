@@ -439,7 +439,6 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import html_text as HT
     from ..sources.artifact import input_fingerprint, materialized_path
     from ..streaming import delta as D
-    from ..streaming import ingest as I
     from ..streaming.ingest import resumable_workdir
 
     base = resumable_workdir(sf_dir, "documents", "hostgraph", "hostgraph-v1")
@@ -462,38 +461,24 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_fingerprint(sf_dir, "documents", "host-edges-v1"),
         _write_src,
     )
-    partials_dir = base / "partials"
-    ckpt = base / "ckpt"
+    partials_dir = str(base / "partials")
     stream = (
         spark.readStream.schema("src string, dst string")
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )
 
-    def fold_batch(batch_df, epoch_id):
-        # per-epoch partial = the batch's distinct pairs: idempotent
-        # on replay (overwrite), tiny (O(new host-pairs)), and folds
-        # by the same DISTINCT the serving read applies
-        (
-            batch_df.distinct()
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with I.scoped_shuffle_partitions(spark, I.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     def fold_pairs(df: DataFrame) -> DataFrame:
         return df.select("src", "dst").distinct()
 
-    D.compact_with(spark, str(partials_dir), fold_pairs)
-    pairs = D.folded_with(spark, str(partials_dir), fold_pairs)
+    # per-epoch partial = the batch's distinct pairs: tiny
+    # (O(new host-pairs)) and folded by the same DISTINCT the serving
+    # read applies
+    D.drain_partials(
+        stream, partials_dir, str(base / "ckpt"), fold_pairs, fresh=False
+    )
+    D.compact_with(spark, partials_dir, fold_pairs)
+    pairs = D.folded_with(spark, partials_dir, fold_pairs)
     n_out = pairs.groupBy(F.col("src").alias("host")).agg(
         F.count("*").cast("long").alias("n_out")
     )

@@ -45,70 +45,69 @@ _QUERY_MODULES = [
 # Queries not listed here keep registration order after the listed ones;
 # all of them still run in bench and pytest regardless.
 _CHECK_FIRST = [
-    # Round-16 window (50 slots), composed mechanically per
-    # tests/test_freshness.py (scripts/freshness.py is the source of
-    # truth; this list just pins its output). At round start the
-    # changed-path and never-checked sets are both EMPTY (the r15
-    # driver verdict re-proved all 50 r15-window entries, including
-    # every r15-touched path), so all 50 slots are rotation slots =
-    # the 50 oldest verdicts: the 11 r9 window-capacity leftovers the
-    # r15 recomposition documented, then 39 of the 40-query r10
-    # cohort in prior iteration order (q_decay_engagement ties the
-    # r10 round inside — window capacity, the invariant's only
-    # allowed reason to stay out — and leads the r17 rotation).
-    # NOTE: if an optimization this round changes a query's reference
-    # closure, that query must displace rotation slots here (the
-    # freshness tests enforce it) — recompose before round close.
-    "q_embedding_stats",
-    "q_ann_batch",
-    "q_bigram_counts",
-    "q_doc_len_histogram",
-    "q_null_profile",
-    "q_key_skew",
-    "q_schema_drift",
-    "q_pruned_scan",
-    "q_vec_quantize",
-    "q_delta_agg",
-    "q_kmv_distinct",
-    "q_rate_5m",
-    "q_error_ratio",
-    "q_quantiles",
-    "q_hll_error_bound",
-    "q_alert_liveness",
-    "q_prom_quantile",
-    "q_rate_per_op",
-    "q_increase_1h",
-    "q_date_histogram",
-    "q_topk_recent",
-    "q_approx_quantile_bound",
-    "q_funnel_stages",
-    "q_time_weighted_avg",
-    "q_anomaly_mad",
-    "q_metrics_exposition",
-    "q_order_priority",
-    "q_late_shipments",
-    "q_blocking_suppliers",
-    "q_cohort_retention",
-    "q_sample_estimate_bound",
-    "q_minhash_neardup",
-    "q_embedding_neardup",
-    "q_frame_sample",
-    "q_multimodal_features",
-    "q_cosine_pairs",
-    "q_ivf_topk_trained",
-    "q_ann_batch_ivf",
-    "q_neardup_recall",
-    "q_doc_chunks",
-    "q_vocab_coverage",
-    "q_embedding_gram",
-    "q_semantic_dedup",
-    "q_bpe_merges",
-    "q_bpe_tokenize",
-    "q_alert_rules_eval",
-    "q_vocab_growth",
-    "q_zorder_layout",
-    "q_embedding_norm_hist",
-    "q_bloom_decontaminate",
+    # Round-17 window (50 slots), composed mechanically per
+    # tests/test_freshness.py from `python scripts/freshness.py` (the
+    # source of truth; this list pins its output). 42 must-haves, then
+    # the 8 oldest verdicts.
+    # (a) 14 changed-path queries: the r16 scoped-shuffle/AQE change
+    #     (functions/dedup._scoped_shuffle_partitions, now also the
+    #     doubling loops' scope) and the staged web corpus.
+    "q_canonical_pick",
+    "q_cluster_leakage",
+    "q_cluster_sizes",
+    "q_crawl_frontier",
+    "q_dedup_yield_by_source",
+    "q_hierarchy_depth",
+    "q_host_graph",
+    "q_label_prop",
+    "q_link_rank",
+    "q_neardup_clusters",
+    "q_pipeline_e2e",
+    "q_subtree_rollup",
+    "q_takedown_propagation",
+    "q_web_corpus_e2e",
+    # (b) 28 stream queries: every drain now runs through
+    #     streaming/ingest.py::drain (epoch partials through
+    #     streaming/delta.py::drain_partials).
+    "q_stream_ingest_counts",
+    "q_stream_cdc_replay",
+    "q_stream_window_counts",
+    "q_stream_dedupe",
+    "q_stream_sessions",
+    "q_stream_stream_join",
+    "q_stream_alerts",
+    "q_stream_join_view",
+    "q_stream_join_view_skew",
+    "q_stream_funnel",
+    "q_stream_topk",
+    "q_stream_late_drops",
+    "q_stream_resume",
+    "q_stream_dq",
+    "q_stream_event_drift",
+    "q_stream_transitions",
+    "q_stream_scd2",
+    "q_stream_delta_agg",
+    "q_stream_doc_dedup",
+    "q_compact_partials",
+    "q_stream_sample",
+    "q_stream_manifest",
+    "q_stream_pii",
+    "q_stream_kmv",
+    "q_stream_gapfill",
+    "q_stream_trend",
+    "q_stream_changepoint",
+    "q_stream_host_graph",
+    # (c) rotation: the r10 leftover, then r11 in prior iteration
+    #     order (the remaining r11 verdicts tie the round inside —
+    #     window capacity — and lead the next rotation).
+    "q_udaf_median",
+    "q_old_image",
+    "q_typed_cast",
+    "q_filter_cmp",
+    "q_arith_update",
+    "q_cdc_replay",
+    "q_union_variants",
+    "q_except_deleted",
 ]
 
 

@@ -24,9 +24,6 @@ spread, not corpus size.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import ingest
@@ -47,10 +44,6 @@ def run_dedup_stream(
     """Drain a document backlog maintaining min-id-per-content-hash
     survivor state. ``fresh=False`` resumes from the existing
     checkpoint (the resumable-workdir posture)."""
-    if fresh:
-        for d in (state_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
-
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -83,14 +76,13 @@ def run_dedup_stream(
             fold,
         )
 
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        stream.writeStream.foreachBatch(apply),
+        checkpoint_dir,
+        state_dir,
+        fresh=fresh,
+    )
 
 
 def survivors(spark: SparkSession, state_dir: str) -> DataFrame:

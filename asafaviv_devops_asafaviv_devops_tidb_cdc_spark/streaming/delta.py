@@ -8,11 +8,12 @@ independent of batch boundaries and arrival order — which is why the
 driver can hash-compare the streamed result against the BATCH oracle
 (q_delta_agg's SQL) exactly.
 
-Idempotence: partials land in an ``epoch=<id>`` directory written with
-mode=overwrite, so a micro-batch retry after a crash rewrites its own
-partial instead of double-counting — the foreachBatch exactly-once
-recipe. At 100 TB the partials are O(groups x batches) rows;
-``compact_partials`` folds them into a versioned BASE with the same
+Idempotence: ``drain_partials`` writes each epoch's partial to an
+``epoch=<id>`` directory with mode=overwrite, so a micro-batch retry
+after a crash rewrites its own partial instead of double-counting —
+the foreachBatch exactly-once recipe, owned here for every partial
+family in the package. At 100 TB the partials are O(groups x
+batches) rows; ``compact_partials`` folds them into a versioned BASE with the same
 commutative fold, bounding the serving read at O(groups + batches
 since last compaction). The base is copy-on-write (``base_v<epoch>``)
 and serving ignores epoch partials at or below the base's version, so
@@ -34,6 +35,36 @@ from . import ingest
 _BASE_PREFIX = "base_v"
 
 
+def drain_partials(
+    stream: DataFrame,
+    partials_dir: str,
+    checkpoint_dir: str,
+    batch_fold,
+    fresh: bool,
+) -> None:
+    """Drain ``stream`` (ingest.drain), writing each micro-batch's
+    ``batch_fold(batch_df)`` as the idempotent partial
+    ``epoch=<id>`` under ``partials_dir``. The write is mode=overwrite,
+    so a retried epoch rewrites its own partial instead of adding a
+    second one — the foreachBatch exactly-once recipe. Every partial
+    family (serving via folded_with, compaction via compact_with)
+    reads what this writes. ``fresh=True`` wipes partials and
+    checkpoint first; ``fresh=False`` resumes."""
+
+    def write(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_fold(batch_df).write.mode("overwrite").parquet(
+            f"{partials_dir}/epoch={epoch_id}"
+        )
+
+    ingest.drain(
+        stream.sparkSession,
+        stream.writeStream.foreachBatch(write),
+        checkpoint_dir,
+        partials_dir,
+        fresh=fresh,
+    )
+
+
 def run_delta_stream(
     spark: SparkSession,
     source_dir: str,
@@ -46,32 +77,20 @@ def run_delta_stream(
     retraction partials. Order-robust (unlike the watermarked dedupe
     path): the fold never inspects event order, so multi-file sources
     replaying in any interleaving converge to the same totals.
-    ``fresh=False`` resumes from existing partials + checkpoint (an
-    already-drained backlog is an empty drain; the idempotent
-    epoch=<id> partials make a resumed crash exactly-once)."""
-    if fresh:
-        for d in (partials_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
+    ``fresh=False`` resumes from existing partials + checkpoint."""
     stream = (
         spark.readStream.schema(ingest.SOURCE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(source_dir)
     )
     stream = stream.repartition(spark.sparkContext.defaultParallelism)
-    normalized = P.normalized_events(stream)
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        part = retraction_totals(P.typed_rows(batch_df))
-        part.write.mode("overwrite").parquet(f"{partials_dir}/epoch={epoch_id}")
-
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            normalized.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain_partials(
+        P.normalized_events(stream),
+        partials_dir,
+        checkpoint_dir,
+        lambda batch_df: retraction_totals(P.typed_rows(batch_df)),
+        fresh,
+    )
 
 
 def _base_version(partials_dir: str) -> tuple[int, Path | None]:

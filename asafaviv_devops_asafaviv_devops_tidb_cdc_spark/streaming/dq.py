@@ -5,14 +5,11 @@ Row-level DQ violations are SUM-DECOMPOSABLE: a not_null /
 accepted_values / range violation is a property of one row, so
 per-micro-batch violation counts fold into the exact batch totals by
 addition — which makes the streamed suite hash-comparable against the
-batch SQL oracle (the same stream/batch-equivalence contract as
-streaming/delta.py, and the same idempotent ``epoch=<id>`` partials
-recipe: a retried micro-batch overwrites its own partial, never
-double-counts). Uniqueness / referential integrity are NOT
-sum-decomposable (they compare rows across batches) — at scale those
-run against the serving state table (streaming/merge.py) per
-compaction, not per micro-batch; this module deliberately accepts only
-row-level kinds and raises otherwise.
+batch SQL oracle (epoch partials: delta.drain_partials). Uniqueness /
+referential integrity are NOT sum-decomposable (they compare rows
+across batches) — at scale those run against the serving state table
+(streaming/merge.py) per compaction, not per micro-batch; this module
+deliberately accepts only row-level kinds and raises otherwise.
 
 Why stream DQ at all: a 100 TB ingest pipeline wants violation
 counters BEFORE the corpus lands (alerting on a poisoned source within
@@ -21,13 +18,10 @@ one micro-batch), not from a nightly scan after the damage is merged.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.dq import _ROW_KINDS, _row_predicate
-from . import ingest
+from . import delta as D
 
 
 def _check_batch(batch: DataFrame, checks: list[dict]) -> DataFrame:
@@ -55,46 +49,32 @@ def run_dq_stream(
     fresh: bool = True,
 ) -> None:
     """Drain a file backlog, folding each micro-batch's row-level
-    violation counts into an idempotent ``epoch=<id>`` partial (ONE
-    tiny row per check per batch). ``fresh=False`` resumes from the
+    violation counts into an epoch partial (ONE tiny row per check
+    per batch). ``fresh=False`` resumes from the
     existing checkpoint (the resumable-workdir posture)."""
     bad = [c["id"] for c in checks if c["kind"] not in _ROW_KINDS]
     if bad:
         raise ValueError(
             f"stream DQ accepts only row-level kinds; not decomposable: {bad}"
         )
-    if fresh:
-        for d in (partials_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
     stream = (
         spark.readStream.schema(source_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        _check_batch(batch_df, checks).write.mode("overwrite").parquet(
-            f"{partials_dir}/epoch={epoch_id}"
-        )
-
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    D.drain_partials(
+        stream,
+        partials_dir,
+        checkpoint_dir,
+        lambda batch_df: _check_batch(batch_df, checks),
+        fresh,
+    )
     # the fold is a pure integer-sum monoid: compact the epoch
     # partials into one crash-safe base (no-op when nothing new)
-    from . import delta as D
-
     D.compact_generic(spark, partials_dir, ["check_id"], ["violations"])
 
 
 def folded_violations(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: per-check violation totals over the live partials
     (base + epochs past it)."""
-    from . import delta as D
-
     return D.folded_generic(spark, partials_dir, ["check_id"], ["violations"])

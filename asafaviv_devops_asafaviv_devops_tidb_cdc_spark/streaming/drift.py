@@ -3,10 +3,8 @@ queries/profiling.py::q_event_drift).
 
 Per-(day, event_type) counts are SUM-DECOMPOSABLE: each micro-batch's
 counts fold into the exact batch totals by addition, so the streamed
-census hash-matches the batch SQL oracle (the stream/batch-equivalence
-contract of streaming/dq.py and streaming/delta.py, with the same
-idempotent ``epoch=<id>`` partials recipe — a retried micro-batch
-overwrites its own partial and never double-counts).
+census hash-matches the batch SQL oracle (epoch partials:
+delta.drain_partials).
 
 Why stream it: distribution shift is most damaging in the hours before
 anyone looks at a nightly report. Folding counts per micro-batch gives
@@ -17,12 +15,20 @@ the event volume, so at 100 TB/day the partials stay kilobytes.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import ingest
+from . import delta as D
+
+
+def _day_counts(batch_df: DataFrame) -> DataFrame:
+    return (
+        batch_df.select(
+            F.expr("unix_millis(ts) div 86400000").cast("long").alias("day_num"),
+            "event_type",
+        )
+        .groupBy("day_num", "event_type")
+        .agg(F.count("*").cast("long").alias("o"))
+    )
 
 
 def run_drift_stream(
@@ -35,48 +41,19 @@ def run_drift_stream(
     fresh: bool = True,
 ) -> None:
     """Drain a file backlog, folding each micro-batch's (day, type)
-    counts into an idempotent ``epoch=<id>`` partial."""
-    if fresh:
-        for d in (partials_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
+    counts into an epoch partial."""
     stream = (
         spark.readStream.schema(source_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.select(
-                F.expr("unix_millis(ts) div 86400000")
-                .cast("long")
-                .alias("day_num"),
-                "event_type",
-            )
-            .groupBy("day_num", "event_type")
-            .agg(F.count("*").cast("long").alias("o"))
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    D.drain_partials(stream, partials_dir, checkpoint_dir, _day_counts, fresh)
     # the fold is a pure integer-sum monoid: compact the epoch
     # partials into one crash-safe base (no-op when nothing new)
-    from . import delta as D
-
     D.compact_generic(spark, partials_dir, ["day_num", "event_type"], ["o"])
 
 
 def folded_counts(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: the (day_num, event_type, o) obs frame summed
     across all epochs — feed to queries.profiling.drift_census."""
-    from . import delta as D
-
     return D.folded_generic(spark, partials_dir, ["day_num", "event_type"], ["o"])

@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import delta as D, ingest
+
 FUNNEL_TYPES = ("view", "click", "purchase")
 
 _STATE_SCHEMA = StructType(
@@ -147,23 +149,18 @@ def run_funnel_stream(
 ) -> DataFrame:
     """Drain ``src_dir`` (one file per micro-batch) through the
     stateful funnel into a memory sink; return the emissions frame."""
-    from .ingest import STREAM_SHUFFLE_PARTITIONS, scoped_shuffle_partitions
-
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            funnel_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        funnel_stream(stream)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append"),
+    )
     return spark.table(name)
 
 
@@ -192,38 +189,25 @@ def run_funnel_resumable(
     checkpoint_dir: str,
 ) -> DataFrame:
     """Resumable drain with BOUNDED serving state: each micro-batch's
-    emissions fold to last-per-user as an idempotent ``epoch=<id>``
-    partial (<= touched users rows), with a persistent checkpoint +
-    state store — first invocation pays the drain, later ones are an
-    empty availableNow pass + a fold of the compacted partials. The
+    emissions fold to last-per-user as an epoch partial
+    (delta.drain_partials; <= touched users rows), with a persistent
+    checkpoint + state store — first invocation pays the drain, later
+    ones are an empty pass + a fold of the compacted partials. The
     shared crash-safe compaction (streaming/delta.py::compact_with)
     runs after each drain under the last-per-user monoid, bounding
     serving at O(users) regardless of how many drains accumulated
     (an append-only emission sink would grow O(users x drains))."""
-    from . import delta as D
-    from .ingest import STREAM_SHUFFLE_PARTITIONS, scoped_shuffle_partitions
-
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            last_per_user(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            funnel_stream(stream)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    D.drain_partials(
+        funnel_stream(stream),
+        partials_dir,
+        checkpoint_dir,
+        last_per_user,
+        fresh=False,
+    )
     D.compact_with(spark, partials_dir, last_per_user)
     return D.folded_with(spark, partials_dir, last_per_user)

@@ -4,10 +4,8 @@ stream twin of queries/advanced_ops.py::q_gapfill_interpolate).
 Per-(event_type, hour) cent-sums are SUM-DECOMPOSABLE: each
 micro-batch's sums fold into the exact batch totals by addition, so
 the streamed series — and therefore the gap-filled, interpolated chart
-served from it — hash-matches the batch SQL oracle (the
-streaming/drift.py recipe: idempotent ``epoch=<id>`` partials, a
-retried micro-batch overwrites its own partial and never
-double-counts).
+served from it — hash-matches the batch SQL oracle (epoch partials:
+delta.drain_partials).
 
 At 100 TB/day the per-epoch state is one tiny row per (type, hour) key
 seen in that batch — the key grid, not the event volume — and the
@@ -17,12 +15,9 @@ refresh, never over raw events.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
+from pyspark.sql import DataFrame, SparkSession
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from . import ingest
+from . import delta as D
 
 
 def run_gapfill_stream(
@@ -35,47 +30,24 @@ def run_gapfill_stream(
     fresh: bool = True,
 ) -> None:
     """Drain a file backlog, folding each micro-batch's (type, hour)
-    cent-sums into an idempotent ``epoch=<id>`` partial."""
-    if fresh:
-        for d in (partials_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
+    cent-sums into an epoch partial."""
     stream = (
         spark.readStream.schema(source_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        # the SAME aggregation as the batch query (one definition —
-        # the twin contract cannot drift)
-        from ..queries.advanced_ops import _hourly_obs
+    # the SAME aggregation as the batch query (one definition — the
+    # twin contract cannot drift)
+    from ..queries.advanced_ops import _hourly_obs
 
-        (
-            _hourly_obs(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with ingest.scoped_shuffle_partitions(
-        spark, ingest.STREAM_SHUFFLE_PARTITIONS
-    ):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    D.drain_partials(stream, partials_dir, checkpoint_dir, _hourly_obs, fresh)
     # the fold is a pure integer-sum monoid: compact the epoch
     # partials into one crash-safe base (no-op when nothing new)
-    from . import delta as D
-
     D.compact_generic(spark, partials_dir, ["event_type", "hr"], ["cents"])
 
 
 def folded_obs(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: the (event_type, hr, cents) obs frame summed
     across all epochs — feed to queries.advanced_ops.gapfill_series."""
-    from . import delta as D
-
     return D.folded_generic(spark, partials_dir, ["event_type", "hr"], ["cents"])

@@ -28,6 +28,7 @@ from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators import parse as P
 from ..sources import envelopes_from_events, load_table
@@ -230,6 +231,35 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
+def drain(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    checkpoint_dir: str | None = None,
+    *state_dirs: str,
+    fresh: bool = False,
+) -> None:
+    """Run one streaming query to the end of its backlog: the
+    ``availableNow`` trigger, started and awaited inside the stream
+    shuffle domain. The exactly-once recipe of every stream in the
+    package — per-epoch idempotent output plus checkpointed offsets —
+    so per-trigger cost has this one owner.
+
+    ``checkpoint_dir`` (omitted for memory sinks) becomes the query's
+    checkpoint. ``fresh=True`` wipes it and the ``state_dirs`` the
+    sink owns before starting; ``fresh=False`` resumes from the
+    committed offsets — an already-drained backlog is an empty pass,
+    a crashed drain continues exactly-once."""
+    if fresh:
+        for d in (checkpoint_dir, *state_dirs):
+            p = Path(d)
+            if p.exists():
+                shutil.rmtree(p)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", str(checkpoint_dir))
+    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
+        writer.trigger(availableNow=True).start().awaitTermination()
+
+
 def stream_workdir(sf_dir: str, tag: str) -> Path:
     """Scratch dir for a streaming query's src/state/ckpt/sink. Prefers
     tmpfs: checkpoint/state/sink writes fsync, and on a real disk those
@@ -295,11 +325,6 @@ def run_ingest(
     wiping — the restart path a production consumer lives on (the
     reference's restart resumes from committed group offsets,
     index.js:350-352; here the checkpoint is the offset store)."""
-    if fresh:
-        for d in (sink_dir, checkpoint_dir):
-            p = Path(d)
-            if p.exists():
-                shutil.rmtree(p)
     stream = read_envelope_stream(spark, source_dir)
     # spread the parse chain across cores — the file (or a single Kafka
     # partition) arrives as one task otherwise; raw strings are cheap to
@@ -320,13 +345,12 @@ def run_ingest(
     normalized = normalized.withColumn("event_date", F.to_date("ts")).repartition(
         "table_name", "event_date"
     )
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            normalized.writeStream.format("parquet")
-            .option("path", sink_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .partitionBy("table_name", "event_date")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        spark,
+        normalized.writeStream.format("parquet")
+        .option("path", sink_dir)
+        .partitionBy("table_name", "event_date"),
+        checkpoint_dir,
+        sink_dir,
+        fresh=fresh,
+    )

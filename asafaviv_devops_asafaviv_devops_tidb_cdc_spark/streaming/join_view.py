@@ -33,12 +33,10 @@ simply drops out of the rejoined bucket.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import parse as P
+from . import ingest
 from .merge import (
     apply_bucketed_fold,
     apply_merge_batch,
@@ -154,20 +152,8 @@ def run_join_view_stream(
     materialized join view per micro-batch. ``fresh=False`` resumes
     from existing state/view/checkpoint (see
     merge.run_replay_stream)."""
-    if fresh:
-        for d in (state_dir, view_dir, checkpoint_dir):
-            p = Path(d)
-            if p.exists():
-                shutil.rmtree(p)
-
-    from .ingest import (
-        SOURCE_SCHEMA,
-        STREAM_SHUFFLE_PARTITIONS,
-        scoped_shuffle_partitions,
-    )
-
     stream = (
-        spark.readStream.schema(SOURCE_SCHEMA)
+        spark.readStream.schema(ingest.SOURCE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(source_dir)
     )
@@ -188,14 +174,14 @@ def run_join_view_stream(
             n_buckets=n_buckets,
         )
 
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            typed.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        typed.writeStream.foreachBatch(apply),
+        checkpoint_dir,
+        state_dir,
+        view_dir,
+        fresh=fresh,
+    )
 
 
 def read_join_view(spark: SparkSession, view_dir: str) -> DataFrame:

@@ -3,12 +3,11 @@ queries/advanced_ops.py::q_kmv_distinct).
 
 The KMV / bottom-k sketch is a commutative, idempotent, BOUNDED-SIZE
 monoid: bottom-K(S1 ∪ S2) = bottom-K(bottom-K(S1) ∪ bottom-K(S2)), so
-each micro-batch keeps its per-group local bottom-K as an
-``epoch=<id>`` partial (<= groups x K tiny rows; a retried batch
-overwrites its own partial and cannot corrupt the fold) and serving
+each micro-batch keeps its per-group local bottom-K as an epoch
+partial (delta.drain_partials; <= groups x K tiny rows) and serving
 takes bottom-K over the union of partials — EXACTLY the batch sketch,
-hash-matching the batch oracle. Same recipe as streaming/sample.py,
-with a cardinality sketch instead of a sample as the folded monoid.
+hash-matching the batch oracle. streaming/sample.py folds the same
+monoid with a sample instead of a cardinality sketch.
 
 At 100 TB/day this is the always-current distinct-count dashboard:
 per-epoch state is bounded by the sketch (not the member count), the
@@ -18,13 +17,10 @@ answers union cardinalities without touching the raw stream again.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import kmv as KMV
-from . import ingest
+from . import delta as D
 
 
 def _hashed(df: DataFrame) -> DataFrame:
@@ -46,43 +42,26 @@ def run_kmv_stream(
     fresh: bool = True,
 ) -> None:
     """Drain a file backlog, folding each micro-batch's per-group
-    local bottom-K into an idempotent ``epoch=<id>`` partial.
-    ``fresh=False`` resumes from the existing checkpoint: an
-    already-drained backlog is an empty availableNow pass and the
-    committed partials keep serving (the resumable-workdir posture)."""
-    if fresh:
-        for d in (partials_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
+    local bottom-K into an epoch partial. ``fresh=False`` resumes from
+    the existing checkpoint: an already-drained backlog is an empty
+    pass and the committed partials keep serving (the
+    resumable-workdir posture)."""
     stream = (
         spark.readStream.schema(source_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            KMV.bottom_k(_hashed(batch_df))
-            .select("member_set", "hv")
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with ingest.scoped_shuffle_partitions(
-        spark, ingest.STREAM_SHUFFLE_PARTITIONS
-    ):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    D.drain_partials(
+        stream,
+        partials_dir,
+        checkpoint_dir,
+        lambda batch_df: KMV.bottom_k(_hashed(batch_df)).select("member_set", "hv"),
+        fresh,
+    )
     # bound the serving read at O(groups x K): bottom-K is a
     # refold-idempotent monoid, so the shared crash-safe compaction
     # folds the epoch partials into one base sketch (no-op when no
     # new epochs landed)
-    from . import delta as D
-
     D.compact_with(spark, partials_dir, _base_sketch)
 
 
@@ -99,8 +78,6 @@ def folded_sketch(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: the exact global per-group bottom-K sketch over
     the live partials (base + epochs past it; distinct absorbs epoch
     overlap — the fold is idempotent)."""
-    from . import delta as D
-
     parts = D.folded_with(
         spark,
         partials_dir,

@@ -29,6 +29,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import parse as P
+from . import ingest
 
 STATE_KEYS = ["table_name", "user_id"]
 STATE_ORDER = ["ts", "offset", "rownum"]
@@ -318,16 +319,8 @@ def run_replay_stream(
     exactly-once. Callers pass a fingerprint-keyed workdir
     (streaming/ingest.py::resumable_workdir) so stale state can never
     outlive a source or logic change."""
-    if fresh:
-        for d in (state_dir, checkpoint_dir):
-            p = Path(d)
-            if p.exists():
-                shutil.rmtree(p)
-
-    from .ingest import SOURCE_SCHEMA
-
     stream = (
-        spark.readStream.schema(SOURCE_SCHEMA)
+        spark.readStream.schema(ingest.SOURCE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(source_dir)
     )
@@ -344,13 +337,10 @@ def run_replay_stream(
             tombstone_horizon_ms=tombstone_horizon_ms,
         )
 
-    from .ingest import STREAM_SHUFFLE_PARTITIONS, scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            typed.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        typed.writeStream.foreachBatch(apply),
+        checkpoint_dir,
+        state_dir,
+        fresh=fresh,
+    )

@@ -4,9 +4,9 @@ queries/training_io.py::q_pii_census).
 Every census statistic is a per-source SUM over disjoint doc sets
 (functions/pii.py::rollup — flagged-doc counts included, since each
 doc lands in exactly one micro-batch), so the monitor folds each
-micro-batch's partial census into an idempotent ``epoch=<id>`` partial
-and serves the exact batch census by addition — hash-matching the
-batch oracle (the streaming/dq.py / streaming/drift.py contract).
+micro-batch's census into an epoch partial (delta.drain_partials) and
+serves the exact batch census by addition — hash-matching the batch
+oracle.
 
 Why stream it: PII exposure is an ingest-time property — a feed that
 starts leaking contact data should be flagged within one micro-batch,
@@ -17,13 +17,10 @@ document volume.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import pii as P
-from . import ingest
+from . import delta as D
 
 
 def run_pii_stream(
@@ -36,45 +33,29 @@ def run_pii_stream(
     fresh: bool = True,
 ) -> None:
     """Drain a documents backlog, folding each micro-batch's per-source
-    PII census into an idempotent ``epoch=<id>`` partial.
-    ``fresh=False`` resumes from the existing checkpoint: an
-    already-drained backlog is an empty availableNow pass and the
-    committed partials keep serving (the resumable-workdir posture)."""
-    if fresh:
-        for d in (partials_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
+    PII census into an epoch partial. ``fresh=False`` resumes from the
+    existing checkpoint: an already-drained backlog is an empty pass
+    and the committed partials keep serving (the resumable-workdir
+    posture)."""
     stream = (
         spark.readStream.schema(source_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            P.rollup(P.doc_metrics(P.with_planted_pii(batch_df)))
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    D.drain_partials(
+        stream,
+        partials_dir,
+        checkpoint_dir,
+        lambda batch_df: P.rollup(P.doc_metrics(P.with_planted_pii(batch_df))),
+        fresh,
+    )
     # bound the serving read at O(sources): the census is a pure sum
     # monoid, so the shared crash-safe compaction folds the epoch
     # partials into one base (no-op when no new epochs landed)
-    from . import delta as D
-
     D.compact_with(spark, partials_dir, P.fold_rollups)
 
 
 def folded_census(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: the exact per-source census summed over the live
     partials (base + epochs past it)."""
-    from . import delta as D
-
     return D.folded_with(spark, partials_dir, P.fold_rollups)

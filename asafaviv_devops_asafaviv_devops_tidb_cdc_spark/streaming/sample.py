@@ -3,14 +3,14 @@ queries/training_io.py::q_sample_fixed).
 
 Bottom-k by a salted sha key is a COMMUTATIVE, IDEMPOTENT fold:
 bottom-k(S1 ∪ S2) = bottom-k(bottom-k(S1) ∪ bottom-k(S2)), so keeping
-each micro-batch's local bottom-k as an ``epoch=<id>`` partial (<= k
-tiny rows per epoch, a retried batch overwrites its own partial) and
-taking bottom-k over the union at serving time yields EXACTLY the
-batch answer — the streamed sample hash-matches the batch oracle. This
-is the classical distributed-reservoir replacement that stays
-deterministic: membership is a pure function of doc_id, so re-running
-the stream, reordering batches, or re-sharding the source cannot
-change the sample.
+each micro-batch's local bottom-k as an epoch partial
+(delta.drain_partials; <= k tiny rows per epoch) and taking bottom-k
+over the union at serving time yields EXACTLY the batch answer — the
+streamed sample hash-matches the batch oracle. This is the classical
+distributed-reservoir replacement that stays deterministic:
+membership is a pure function of doc_id, so re-running the stream,
+reordering batches, or re-sharding the source cannot change the
+sample.
 
 At 100 TB the state is k rows per micro-batch epoch (compactable to a
 single k-row base exactly like streaming/delta.py), and each batch's
@@ -19,13 +19,10 @@ work is a local TakeOrderedAndProject — no shuffle of the corpus.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.sampling import SAMPLE_K, SAMPLE_SALT, salted_key
-from . import ingest
+from . import delta as D
 
 
 def _keyed(df: DataFrame) -> DataFrame:
@@ -44,38 +41,22 @@ def run_sample_stream(
     fresh: bool = True,
 ) -> None:
     """Drain a file backlog, folding each micro-batch's local bottom-k
-    into an idempotent ``epoch=<id>`` partial. ``fresh=False`` resumes
-    from the existing checkpoint (the resumable-workdir posture)."""
-    if fresh:
-        for d in (partials_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
+    into an epoch partial. ``fresh=False`` resumes from the existing
+    checkpoint (the resumable-workdir posture)."""
     stream = (
         spark.readStream.schema(source_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            _keyed(batch_df)
-            .orderBy("h")
-            .limit(SAMPLE_K)
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    D.drain_partials(
+        stream,
+        partials_dir,
+        checkpoint_dir,
+        lambda batch_df: _bottom_k(_keyed(batch_df)),
+        fresh,
+    )
     # bottom-k is a refold-idempotent monoid: compact the epoch
     # partials into one crash-safe base (no-op when nothing new)
-    from . import delta as D
-
     D.compact_with(spark, partials_dir, _bottom_k)
 
 
@@ -87,6 +68,4 @@ def _bottom_k(parts: DataFrame) -> DataFrame:
 def folded_sample(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: exact global bottom-k over the live partials
     (base + epochs past it)."""
-    from . import delta as D
-
     return D.folded_with(spark, partials_dir, _bottom_k)

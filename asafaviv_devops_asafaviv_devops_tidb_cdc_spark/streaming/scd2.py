@@ -33,9 +33,6 @@ touched at all.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import parse as P
@@ -76,10 +73,6 @@ def run_scd2_stream(
     """Drain the envelope backlog maintaining the per-key event state
     the SCD2 view derives from. ``fresh=False`` resumes from existing
     state + checkpoint (see merge.run_replay_stream)."""
-    if fresh:
-        for d in (state_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
-
     stream = (
         spark.readStream.schema(ingest.SOURCE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -102,14 +95,13 @@ def run_scd2_stream(
             rebuild_state,
         )
 
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            typed.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        typed.writeStream.foreachBatch(apply),
+        checkpoint_dir,
+        state_dir,
+        fresh=fresh,
+    )
 
 
 def history(spark: SparkSession, state_dir: str) -> DataFrame:

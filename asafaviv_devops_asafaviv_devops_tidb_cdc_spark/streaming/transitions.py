@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import delta as D, ingest
+
 _STATE_SCHEMA = StructType(
     [
         StructField("t_us", ArrayType(LongType())),
@@ -124,18 +126,13 @@ def run_transitions_stream(
 ) -> DataFrame:
     """Drain ``src_dir`` through the stateful census into a memory
     sink; return the emitted delta frame (test harness path)."""
-    from .ingest import STREAM_SHUFFLE_PARTITIONS, scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            _delta_stream(spark, src_dir, schema)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        _delta_stream(spark, src_dir, schema)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append"),
+    )
     return spark.table(name)
 
 
@@ -150,35 +147,22 @@ def run_transitions_resumable(
     checkpoint_dir: str,
 ) -> DataFrame:
     """Resumable drain with BOUNDED serving state: each micro-batch's
-    deltas fold onto the (from_type, to_type) grid as an idempotent
-    ``epoch=<id>`` partial (<= type^2 rows — a retried batch
-    overwrites its own partial), with a persistent checkpoint + state
-    store, so the FIRST invocation pays the real drain and every later
-    one is an empty availableNow pass plus a grid fold. Appending raw
-    deltas to a sink would grow the serving read O(events) forever;
-    the per-epoch grid fold + the shared crash-safe compaction
-    (streaming/delta.py::compact_generic, called here after each
-    drain — a no-op unless new epochs landed) bound it at O(grid)
+    deltas fold onto the (from_type, to_type) grid as an epoch partial
+    (delta.drain_partials; <= type^2 rows), with a persistent
+    checkpoint + state store, so the FIRST invocation pays the real
+    drain and every later one is an empty pass plus a grid fold.
+    Appending raw deltas to a sink would grow the serving read
+    O(events) forever; the per-epoch grid fold + the shared crash-safe
+    compaction (streaming/delta.py::compact_generic, called here after
+    each drain — a no-op unless new epochs landed) bound it at O(grid)
     regardless of stream length. Returns the served count frame."""
-    from . import delta as D
-    from .ingest import STREAM_SHUFFLE_PARTITIONS, scoped_shuffle_partitions
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            D.fold_generic(batch_df, _GRID_COLS, ["delta"])
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            _delta_stream(spark, src_dir, schema)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    D.drain_partials(
+        _delta_stream(spark, src_dir, schema),
+        partials_dir,
+        checkpoint_dir,
+        lambda batch_df: D.fold_generic(batch_df, _GRID_COLS, ["delta"]),
+        fresh=False,
+    )
     D.compact_generic(spark, partials_dir, _GRID_COLS, ["delta"])
     counts = D.folded_generic(spark, partials_dir, _GRID_COLS, ["delta"])
     return counts.select(

@@ -4,8 +4,7 @@ stream twin of queries/advanced_ops.py::q_trend_slope).
 Per-(event_type, day) cent-sums are SUM-DECOMPOSABLE: micro-batch sums
 fold into the exact batch totals by addition, so the regression served
 from the folded series — slope, direction, all of it — hash-matches
-the batch SQL oracle (the streaming/drift.py recipe: idempotent
-``epoch=<id>`` partials; a retried batch overwrites its own partial).
+the batch SQL oracle (epoch partials: delta.drain_partials).
 
 At 100 TB/day the per-epoch state is one row per (type, day) key seen
 in that batch; the OLS assembly reruns over the bounded type x day
@@ -15,12 +14,9 @@ without ever rescanning events.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
+from pyspark.sql import DataFrame, SparkSession
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from . import ingest
+from . import delta as D
 
 
 def run_trend_stream(
@@ -33,47 +29,24 @@ def run_trend_stream(
     fresh: bool = True,
 ) -> None:
     """Drain a file backlog, folding each micro-batch's (type, day)
-    cent-sums into an idempotent ``epoch=<id>`` partial."""
-    if fresh:
-        for d in (partials_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
+    cent-sums into an epoch partial."""
     stream = (
         spark.readStream.schema(source_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        # the SAME aggregation as the batch query (one definition —
-        # the twin contract cannot drift)
-        from ..queries.advanced_ops import _daily_obs
+    # the SAME aggregation as the batch query (one definition — the
+    # twin contract cannot drift)
+    from ..queries.advanced_ops import _daily_obs
 
-        (
-            _daily_obs(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with ingest.scoped_shuffle_partitions(
-        spark, ingest.STREAM_SHUFFLE_PARTITIONS
-    ):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    D.drain_partials(stream, partials_dir, checkpoint_dir, _daily_obs, fresh)
     # the fold is a pure integer-sum monoid: compact the epoch
     # partials into one crash-safe base (no-op when nothing new)
-    from . import delta as D
-
     D.compact_generic(spark, partials_dir, ["event_type", "day_num"], ["y"])
 
 
 def folded_daily(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: the (event_type, day_num, y) daily frame summed
     across epochs — feed to queries.advanced_ops.trend_from_daily."""
-    from . import delta as D
-
     return D.folded_generic(spark, partials_dir, ["event_type", "day_num"], ["y"])

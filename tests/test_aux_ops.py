@@ -210,6 +210,53 @@ def test_neardup_clusters_uses_reliable_checkpoint(spark, tmp_path):
     assert os.path.isdir(ckpt) and any(os.scandir(ckpt)), "checkpoint dir unused"
 
 
+def test_scoped_shuffle_partitions_restores_conf(spark):
+    """The one scoped shuffle-domain helper (functions/dedup.py, also
+    used by the doubling loops in queries/advanced_ops.py): an error
+    inside the scope restores both confs, AQE is switched off only
+    for a domain sized below the session value, and a conf set that
+    fails half-way still restores the partition count."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.functions.dedup import (
+        _scoped_shuffle_partitions,
+    )
+
+    p_key, a_key = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
+    old_p, old_a = spark.conf.get(p_key), spark.conf.get(a_key)
+    cur = int(old_p)
+    assert cur > 2 and old_a == "true"
+
+    with pytest.raises(RuntimeError, match="inside the scope"):
+        with _scoped_shuffle_partitions(spark, cur - 1):
+            assert spark.conf.get(p_key) == str(cur - 1)
+            assert spark.conf.get(a_key) == "false"
+            raise RuntimeError("inside the scope")
+    assert (spark.conf.get(p_key), spark.conf.get(a_key)) == (old_p, old_a)
+
+    for n in (cur, cur + 4):  # not sized down: AQE stays as it was
+        with _scoped_shuffle_partitions(spark, n):
+            assert spark.conf.get(p_key) == str(n)
+            assert spark.conf.get(a_key) == old_a
+    assert (spark.conf.get(p_key), spark.conf.get(a_key)) == (old_p, old_a)
+
+    class _FailingConf(dict):
+        def get(self, key):
+            return self[key]
+
+        def set(self, key, value):
+            if key == a_key:
+                raise RuntimeError("conf set failed")
+            self[key] = value
+
+    class _Session:
+        conf = _FailingConf({p_key: "8", a_key: "true"})
+
+    fake = _Session()
+    with pytest.raises(RuntimeError, match="conf set failed"):
+        with _scoped_shuffle_partitions(fake, 2):
+            pass
+    assert fake.conf[p_key] == "8"
+
+
 def test_hll_distinct_within_tolerance(spark):
     rows = registry_queries()["q_hll_distinct"](spark, SF_SMOKE).collect()
     assert rows

@@ -1177,3 +1177,65 @@ def test_ingest_resumable_second_call_is_empty_pass(spark):
     again = _counts(registry.QUERIES["q_stream_dedupe"](spark, SF_SMOKE))
     assert again == first
     assert sorted(p.name for p in meta.iterdir()) == committed
+
+
+def test_drain_partials_resumes_after_fold_failure(spark, tmp_path):
+    """Fault injection for the shared epoch-partial drain
+    (streaming/delta.py::drain_partials): a batch fold that raises on
+    epoch 1 stops the drain with the session conf restored, and a
+    resumed drain (fresh=False) re-runs epoch 1 into the same
+    ``epoch=1`` partial — serving exactly what an uninterrupted drain
+    serves."""
+    import pytest as _pytest
+
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta
+
+    src = str(tmp_path / "src")
+    spark.range(0, 300).selectExpr("id % 7 AS k", "id AS v").repartition(
+        3
+    ).write.parquet(src)
+
+    def stream():
+        return (
+            spark.readStream.schema("k long, v long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+    def fold(batch_df):
+        return delta.fold_generic(batch_df, ["k"], ["v"])
+
+    calls = []
+
+    def failing_fold(batch_df):
+        calls.append(len(calls))
+        if len(calls) == 2:  # epoch 1, first attempt
+            raise RuntimeError("injected fold failure")
+        return fold(batch_df)
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    pdir, ckpt = str(tmp_path / "partials"), str(tmp_path / "ckpt")
+    with _pytest.raises(Exception, match="injected fold failure"):
+        delta.drain_partials(stream(), pdir, ckpt, failing_fold, fresh=True)
+    assert spark.conf.get(key) == old
+    assert [e for e, _ in delta._epoch_dirs(pdir)] == [0]
+
+    delta.drain_partials(stream(), pdir, ckpt, failing_fold, fresh=False)
+    clean = str(tmp_path / "clean")
+    delta.drain_partials(
+        stream(), clean, str(tmp_path / "clean_ckpt"), fold, fresh=True
+    )
+
+    def served(d):
+        return sorted(
+            (r["k"], r["v"])
+            for r in delta.folded_generic(spark, d, ["k"], ["v"]).collect()
+        )
+
+    assert served(pdir) == served(clean)
+    batch = spark.read.parquet(src).groupBy("k").agg(F.sum("v").alias("v"))
+    assert served(clean) == sorted((r["k"], r["v"]) for r in batch.collect())
+    names = [p.name for p in Path(pdir).iterdir()]
+    assert names.count("epoch=1") == 1
+    assert [e for e, _ in delta._epoch_dirs(pdir)] == [0, 1, 2]
