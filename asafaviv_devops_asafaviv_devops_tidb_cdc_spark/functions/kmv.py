@@ -1,6 +1,7 @@
 """K-minimum-values (KMV / bottom-k) distinct sketch, shared by the
 batch query (queries/advanced_ops.py::q_kmv_distinct), its DuckDB
-oracle string, and the streaming fold (streaming/kmv.py) — the
+oracle string, and the streaming fold (queries/advanced_ops.py::
+_kmv_partial / _kmv_fold, served by streaming/delta.py::serve_partials) — the
 sampling.py single-definition rule applied to a cardinality sketch.
 
 KMV (Bar-Yossef et al. 2002, "Counting distinct elements in a data

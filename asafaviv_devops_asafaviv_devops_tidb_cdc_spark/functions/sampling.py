@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-# exact-k uniform sample (q_sample_fixed / streaming/sample.py)
+# exact-k uniform sample (q_sample_fixed / its stream twin q_stream_sample)
 SAMPLE_K = 100
 SAMPLE_SALT = "fix1_"
 

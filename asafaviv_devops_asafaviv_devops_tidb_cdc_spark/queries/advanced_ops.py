@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions import kmv as KMV, similarity
 from ..registry import ORACLES, register
 from ..sources import load_table
+from ..streaming import delta as D
 from ._money import CENTS_SQL, cents
 
 _EV_CENTS_SQL = CENTS_SQL.format(x="value")
@@ -153,11 +154,33 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _kmv_report(_kmv_union_and_summarize(per_group), _kmv_exact_side(li))
 
 
+def _kmv_partial(li: DataFrame) -> DataFrame:
+    """One micro-batch's per-group local bottom-K over the SAME member
+    hash as q_kmv_distinct and its oracle (functions/kmv.py)."""
+    hashed = li.select(
+        F.col("l_returnflag").alias("member_set"),
+        KMV.hash_key(F.col("l_partkey")).alias("hv"),
+    ).distinct()
+    return KMV.bottom_k(hashed).select("member_set", "hv")
+
+
+def _kmv_fold(parts: DataFrame) -> DataFrame:
+    """The KMV monoid: per-group bottom-K over any union of partial
+    sketches. Bottom-K is commutative, bounded and REFOLD-IDEMPOTENT —
+    bottom-K(S1 ∪ S2) = bottom-K(bottom-K(S1) ∪ bottom-K(S2)), and the
+    distinct absorbs a member seen in several batches — so folding the
+    per-batch sketches is EXACTLY the batch sketch. The rank column is
+    dropped: a base is itself a partial."""
+    return KMV.bottom_k(parts.select("member_set", "hv").distinct()).select(
+        "member_set", "hv"
+    )
+
+
 @register("q_stream_kmv", oracle=None)  # batch oracle attached below
 def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E27b — KMV sketch STREAM TWIN: each micro-batch folds its local
     per-group bottom-K (<= groups x K tiny rows, an epoch partial —
-    streaming/delta.py::drain_partials) and serving takes bottom-K
+    streaming/delta.py::serve_partials) and serving takes bottom-K
     over the union of partials:
     because the sketch is a commutative idempotent bounded monoid the
     streamed sketch is EXACTLY the batch sketch and hash-matches
@@ -169,7 +192,6 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming would need unbounded state, which is precisely what the
     sketch exists to avoid)."""
     from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import kmv as SKMV
     from ..streaming.ingest import resumable_workdir
 
     # resumable: the first call drains the 3 micro-batches into epoch
@@ -183,15 +205,13 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_fingerprint(sf_dir, "lineitem", "kmv-src-v1"),
         lambda dest: li.repartition(6).write.mode("overwrite").parquet(dest),
     )
-    SKMV.run_kmv_stream(
-        spark,
-        src,
-        "l_returnflag string, l_partkey bigint",
-        str(base / "partials"),
-        str(base / "ckpt"),
-        fresh=False,
+    stream = (
+        spark.readStream.schema("l_returnflag string, l_partkey bigint")
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
     )
-    folded = SKMV.folded_sketch(spark, str(base / "partials"))
+    # re-rank the served sketch: the stored partials carry no rank
+    folded = KMV.bottom_k(D.serve_partials(stream, base, _kmv_partial, _kmv_fold))
     return _kmv_report(_kmv_union_and_summarize(folded), _kmv_exact_side(li))
 
 
@@ -318,6 +338,13 @@ def _hourly_obs(ev: DataFrame) -> DataFrame:
     )
 
 
+def _hourly_fold(parts: DataFrame) -> DataFrame:
+    """Hourly cent-sums are SUM-DECOMPOSABLE: every event lands in
+    exactly one micro-batch, so per-batch _hourly_obs frames add up to
+    the batch series. State is one row per (type, hour) key."""
+    return D.fold_generic(parts, ["event_type", "hr"], ["cents"])
+
+
 @register("q_gapfill_interpolate", oracle=_GAPFILL_ORACLE)
 def q_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W15 — time-bucket gap-fill (the TimescaleDB
@@ -341,7 +368,7 @@ def q_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W15b — gap-fill STREAM TWIN: the hourly (type, hr) cent-sums
     are SUM-DECOMPOSABLE, so each micro-batch folds one tiny
-    per-(type, hr) partial (streaming/delta.py::drain_partials) and
+    per-(type, hr) partial (streaming/delta.py::serve_partials) and
     serving sums the partials into the
     identical obs frame, then runs the SAME gapfill_series — the
     streamed densified dashboard hash-matches the batch SQL oracle
@@ -349,26 +376,13 @@ def q_stream_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fill recomputes over the bounded (type x hour) grid each
     refresh, while per-epoch state tracks the key grid, not event
     volume."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import gapfill as SG
-    from ..streaming.ingest import resumable_workdir
+    from ..streaming.ingest import events_landing_stream, resumable_workdir
 
     base = resumable_workdir(sf_dir, "events", "gapfill", "gapfill-v2")
-    ev = load_table(spark, sf_dir, "events")
-    # share the normalized landing with the drift/DQ monitors
-    src = materialized_path(
-        "events_normalized",
-        input_fingerprint(sf_dir, "events", "dq-src-v1"),
-        lambda dest: ev.write.mode("overwrite").parquet(dest),
+    obs = D.serve_partials(
+        events_landing_stream(spark, sf_dir), base, _hourly_obs, _hourly_fold
     )
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in ev.schema.fields
-    )
-    SG.run_gapfill_stream(
-        spark, src, schema, str(base / "partials"), str(base / "ckpt"),
-        fresh=False,
-    )
-    return gapfill_series(SG.folded_obs(spark, str(base / "partials")))
+    return gapfill_series(obs)
 
 
 # the stream twin folds to the identical obs frame, so the batch SQL
@@ -1204,6 +1218,13 @@ def _daily_obs(ev: DataFrame) -> DataFrame:
     )
 
 
+def _daily_fold(parts: DataFrame) -> DataFrame:
+    """Daily cent-sums are SUM-DECOMPOSABLE: every event lands in
+    exactly one micro-batch, so per-batch _daily_obs frames add up to
+    the batch daily frame. State is one row per (type, day) key."""
+    return D.fold_generic(parts, ["event_type", "day_num"], ["y"])
+
+
 def trend_from_daily(obs: DataFrame) -> DataFrame:
     """The OLS assembly over a (event_type, day_num, y) daily frame —
     shared verbatim by the batch query and the streaming twin (whose
@@ -1463,36 +1484,30 @@ def q_dbscan_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _served_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The folded (event_type, day_num, y) frame of the events stream,
+    shared by q_stream_trend and q_stream_changepoint (one state, many
+    views)."""
+    from ..streaming.ingest import events_landing_stream, resumable_workdir
+
+    base = resumable_workdir(sf_dir, "events", "trend", "trend-v2")
+    return D.serve_partials(
+        events_landing_stream(spark, sf_dir), base, _daily_obs, _daily_fold
+    )
+
+
 @register("q_stream_trend", oracle=None)  # batch oracle attached below
 def q_stream_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X30b — OLS trend STREAM TWIN: daily cent-sums are
     SUM-DECOMPOSABLE, so each micro-batch folds one tiny per-(type,
-    day) partial (streaming/delta.py::drain_partials) and serving
+    day) partial (streaming/delta.py::serve_partials) and serving
     sums the partials into the identical daily
     frame, then runs the SAME trend_from_daily — the live trend
     detector hash-matches the batch SQL oracle exactly. The regression
     recomputes over the bounded type x day grid each refresh; state
     tracks the key grid, not event volume — continuously-updated
     'error revenue rising' alerting at 100 TB/day."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import trend as STR
-    from ..streaming.ingest import resumable_workdir
-
-    base = resumable_workdir(sf_dir, "events", "trend", "trend-v2")
-    ev = load_table(spark, sf_dir, "events")
-    src = materialized_path(
-        "events_normalized",
-        input_fingerprint(sf_dir, "events", "dq-src-v1"),
-        lambda dest: ev.write.mode("overwrite").parquet(dest),
-    )
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in ev.schema.fields
-    )
-    STR.run_trend_stream(
-        spark, src, schema, str(base / "partials"), str(base / "ckpt"),
-        fresh=False,
-    )
-    return trend_from_daily(STR.folded_daily(spark, str(base / "partials")))
+    return trend_from_daily(_served_daily(spark, sf_dir))
 
 
 # the stream twin folds to the identical daily frame, so the batch SQL
@@ -1675,7 +1690,7 @@ def changepoint_from_daily(d: DataFrame) -> DataFrame:
 def q_stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X32b — changepoint STREAM VIEW over the SAME folded state as
     the trend twin: one streaming fold (the per-(type, day) cent-sum
-    partials of streaming/trend.py) serves MULTIPLE analytics views —
+    partials of _served_daily) serves MULTIPLE analytics views —
     the OLS trend (q_stream_trend) and this level-shift scan — the
     'one state, many dashboards' economics that make folded partials
     the right streaming substrate (adding a view costs zero extra
@@ -1684,26 +1699,8 @@ def q_stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-decomposability), then the SAME changepoint_from_daily as the
     batch query, so the streamed answer hash-matches the batch SQL
     oracle."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import trend as STR
-    from ..streaming.ingest import resumable_workdir
-
-    base = resumable_workdir(sf_dir, "events", "trend", "trend-v2")
-    ev = load_table(spark, sf_dir, "events")
-    src = materialized_path(
-        "events_normalized",
-        input_fingerprint(sf_dir, "events", "dq-src-v1"),
-        lambda dest: ev.write.mode("overwrite").parquet(dest),
-    )
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in ev.schema.fields
-    )
-    STR.run_trend_stream(
-        spark, src, schema, str(base / "partials"), str(base / "ckpt"),
-        fresh=False,
-    )
     daily = (
-        STR.folded_daily(spark, str(base / "partials"))
+        _served_daily(spark, sf_dir)
         .groupBy("day_num")
         .agg(F.sum("y").cast("long").alias("y"))
     )

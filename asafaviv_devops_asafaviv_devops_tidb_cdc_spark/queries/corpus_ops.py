@@ -631,10 +631,8 @@ def q_stream_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bump the version on any retraction-fold change)
     base = I.resumable_workdir(sf_dir, "events", "delta", "delta-v1")
     src = I.envelope_files(spark, sf_dir, None, n_files=4)
-    D.run_delta_stream(
-        spark, src, str(base / "partials"), str(base / "ckpt"), fresh=False
-    )
-    return D.folded_totals(spark, str(base / "partials"))
+    D.run_delta_stream(spark, src, str(base / "partials"), str(base / "ckpt"))
+    return D.folded_with(spark, str(base / "partials"), D.fold_totals)
 
 
 # stream/batch equivalence IS the claim: the streamed fold must
@@ -1148,7 +1146,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_compact_partials", oracle=None)
 def q_compact_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 maintenance — the crash-safe partials compaction
-    (streaming/delta.py::compact_partials) driven end to end: run the
+    (streaming/delta.py::compact_with) driven end to end: run the
     retraction-fold stream (4 epoch partials), compact them into a
     versioned base (staged write + atomic rename = the commit point),
     compact AGAIN (must no-op), then serve. The served totals must
@@ -1168,12 +1166,11 @@ def q_compact_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = resumable_workdir(sf_dir, "events", "delta_compact", "dcompact-v1")
     src = I.envelope_files(spark, sf_dir, None, n_files=4)
-    D.run_delta_stream(
-        spark, src, str(base / "partials"), str(base / "ckpt"), fresh=False
-    )
-    D.compact_partials(spark, str(base / "partials"))
-    D.compact_partials(spark, str(base / "partials"))  # idempotent no-op
-    return D.folded_totals(spark, str(base / "partials"))
+    partials_dir = str(base / "partials")
+    D.run_delta_stream(spark, src, partials_dir, str(base / "ckpt"))
+    D.compact_with(spark, partials_dir, D.fold_totals)
+    D.compact_with(spark, partials_dir, D.fold_totals)  # idempotent no-op
+    return D.folded_with(spark, partials_dir, D.fold_totals)
 
 
 ORACLES["q_compact_partials"] = ORACLES["q_delta_agg"]

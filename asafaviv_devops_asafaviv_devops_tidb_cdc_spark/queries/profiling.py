@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import ORACLES, register
 from ..sources import load_table
+from ..streaming import delta as D
 
 
 @register(
@@ -381,6 +382,45 @@ STREAM_DQ_CHECKS = [
 ]
 
 
+def _dq_partial(checks: list[dict]):
+    """Batch fold of the stream DQ monitor: one (check_id, violations)
+    row per check per micro-batch. Only row-level kinds qualify: a
+    not_null / accepted_values / range violation is a property of one
+    row, so per-batch counts are SUM-DECOMPOSABLE (see _dq_fold).
+    Uniqueness and referential integrity compare rows ACROSS batches —
+    per-batch counts would miss a duplicate split over two batches — so
+    they run against the serving state table per compaction, and are
+    refused here, before any stream starts."""
+    from ..functions.dq import _ROW_KINDS, _row_predicate
+
+    bad = [c["id"] for c in checks if c["kind"] not in _ROW_KINDS]
+    if bad:
+        raise ValueError(
+            f"stream DQ accepts only row-level kinds; not decomposable: {bad}"
+        )
+
+    def fold(batch: DataFrame) -> DataFrame:
+        wide = batch.agg(
+            *[
+                F.sum(F.when(_row_predicate(ch), 1).otherwise(0))
+                .cast("long")
+                .alias(ch["id"])
+                for ch in checks
+            ]
+        )
+        stack = ", ".join(f"'{ch['id']}', {ch['id']}" for ch in checks)
+        return wide.selectExpr(
+            f"stack({len(checks)}, {stack}) AS (check_id, violations)"
+        )
+
+    return fold
+
+
+def _dq_fold(parts: DataFrame) -> DataFrame:
+    """Per-check violation totals: row-level counts add up by check."""
+    return D.fold_generic(parts, ["check_id"], ["violations"])
+
+
 @register(
     "q_stream_dq",
     oracle="""
@@ -402,34 +442,24 @@ FROM events
 )
 def q_stream_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Governance stream form — row-level DQ checks maintained by a
-    REAL Structured Streaming query (streaming/dq.py): each
-    micro-batch folds its violation counts into an idempotent epoch
-    partial; serving sums the partials. Row-level violations are
+    REAL Structured Streaming query (delta.serve_partials over
+    _dq_partial / _dq_fold): each micro-batch folds its violation
+    counts into an idempotent epoch partial; serving sums the
+    partials. Row-level violations are
     sum-decomposable, so the STREAMED totals hash-match the batch SQL
     oracle exactly — stream/batch equivalence for the DQ family (the
     monitor a 100 TB ingest runs to catch a poisoned source within one
     micro-batch instead of at the nightly scan). Non-decomposable
     kinds (unique/FK) are refused by the stream evaluator by design."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import dq as SDQ
-    from ..streaming.ingest import resumable_workdir
+    from ..streaming.ingest import events_landing_stream, resumable_workdir
 
     base = resumable_workdir(sf_dir, "events", "dq", "dq-v2")
-    ev = load_table(spark, sf_dir, "events")
-    # the stream's file source is the normalized events table, landed
-    # once per fingerprint (same sharing contract as envelope_files)
-    src = materialized_path(
-        "events_normalized",
-        input_fingerprint(sf_dir, "events", "dq-src-v1"),
-        lambda dest: ev.write.mode("overwrite").parquet(dest),
+    return D.serve_partials(
+        events_landing_stream(spark, sf_dir),
+        base,
+        _dq_partial(STREAM_DQ_CHECKS),
+        _dq_fold,
     )
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in ev.schema.fields)
-    SDQ.run_dq_stream(
-        spark, src, schema, STREAM_DQ_CHECKS,
-        str(base / "partials"), str(base / "ckpt"),
-        fresh=False,
-    )
-    return SDQ.folded_violations(spark, str(base / "partials"))
 
 
 @register(
@@ -510,11 +540,31 @@ def drift_census(obs: DataFrame) -> DataFrame:
     )
 
 
+def _drift_partial(ev: DataFrame) -> DataFrame:
+    """Per-(day_num, event_type) event counts of one micro-batch — the
+    obs frame q_event_drift aggregates, folded by _drift_fold."""
+    return (
+        ev.select(
+            F.expr("unix_millis(ts) div 86400000").cast("long").alias("day_num"),
+            "event_type",
+        )
+        .groupBy("day_num", "event_type")
+        .agg(F.count("*").cast("long").alias("o"))
+    )
+
+
+def _drift_fold(parts: DataFrame) -> DataFrame:
+    """Counts are SUM-DECOMPOSABLE: every event lands in exactly one
+    micro-batch, so per-batch (day, type) counts add up to the batch
+    obs frame. State is one row per (day, type) key, never per event."""
+    return D.fold_generic(parts, ["day_num", "event_type"], ["o"])
+
+
 @register("q_stream_event_drift", oracle=None)  # batch oracle attached below
 def q_stream_event_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift STREAM TWIN: per-micro-batch (day, type)
     counts folded into epoch partials (streaming/delta.py::
-    drain_partials; counts are sum-decomposable, so the partials add
+    serve_partials; counts are sum-decomposable, so the partials add
     up to the batch counts); serving
     sums the partials into the obs frame and runs the SAME
     drift_census as the batch query, so the streamed result
@@ -523,26 +573,13 @@ def q_stream_event_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch of a source going bad, with per-epoch state ONE tiny
     row per (day, type) seen in that batch — state size tracks the
     key grid, not the event volume."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import drift as SD
-    from ..streaming.ingest import resumable_workdir
+    from ..streaming.ingest import events_landing_stream, resumable_workdir
 
     base = resumable_workdir(sf_dir, "events", "drift", "drift-v2")
-    ev = load_table(spark, sf_dir, "events")
-    # share the normalized landing with the stream-DQ monitor
-    src = materialized_path(
-        "events_normalized",
-        input_fingerprint(sf_dir, "events", "dq-src-v1"),
-        lambda dest: ev.write.mode("overwrite").parquet(dest),
+    obs = D.serve_partials(
+        events_landing_stream(spark, sf_dir), base, _drift_partial, _drift_fold
     )
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in ev.schema.fields
-    )
-    SD.run_drift_stream(
-        spark, src, schema, str(base / "partials"), str(base / "ckpt"),
-        fresh=False,
-    )
-    return drift_census(SD.folded_counts(spark, str(base / "partials")))
+    return drift_census(obs)
 
 
 # the stream twin folds to the identical obs frame, so the batch SQL
@@ -754,8 +791,7 @@ def q_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         src,
         "user_id bigint, event_id bigint, ts timestamp, event_type string",
-        str(base / "partials"),
-        str(base / "ckpt"),
+        base,
     )
     return transition_report(counts)
 

@@ -597,9 +597,7 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(dest),
     )
     base = ingest.resumable_workdir(sf_dir, "events", "funnel", "funnel-v3")
-    served = FU.run_funnel_resumable(
-        spark, src, events.schema, str(base / "partials"), str(base / "ckpt")
-    )
+    served = FU.run_funnel_resumable(spark, src, events.schema, base)
     # `served` is already last-per-user; final_stage_counts' window
     # pass over it is a no-op selection, keeping one serving path
     return FU.final_stage_counts(served)

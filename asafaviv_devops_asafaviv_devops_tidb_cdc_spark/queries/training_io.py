@@ -511,6 +511,24 @@ def q_sample_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sample_partial(docs: DataFrame) -> DataFrame:
+    """One micro-batch's local bottom-k by the q_sample_fixed draw key
+    (<= k rows: a local TakeOrderedAndProject, no corpus shuffle)."""
+    return _sample_fold(
+        docs.select("doc_id", "source", SK.salted_key(SK.SAMPLE_SALT).alias("h"))
+    )
+
+
+def _sample_fold(parts: DataFrame) -> DataFrame:
+    """Bottom-k by the salted sha key is a commutative, REFOLD-
+    IDEMPOTENT monoid: bottom-k(S1 ∪ S2) = bottom-k(bottom-k(S1) ∪
+    bottom-k(S2)), so folding per-batch samples is EXACTLY the batch
+    sample. Membership is a pure function of doc_id, so re-running,
+    reordering or re-sharding the stream cannot change it — the
+    deterministic replacement for reservoir sampling."""
+    return parts.orderBy("h").limit(SK.SAMPLE_K).select("doc_id", "source", "h")
+
+
 @register(
     "q_sample_per_group",
     oracle=f"""
@@ -762,7 +780,7 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — the deterministic replacement for streaming reservoir
     sampling (whose membership depends on arrival order and RNG)."""
     from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import sample as SS
+    from ..streaming import delta as D
     from ..streaming.ingest import resumable_workdir
 
     base = resumable_workdir(sf_dir, "documents", "sample", "sample-v2")
@@ -772,19 +790,23 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_fingerprint(sf_dir, "documents", "sample-src-v1"),
         lambda dest: docs.repartition(6).write.mode("overwrite").parquet(dest),
     )
-    SS.run_sample_stream(
-        spark,
-        src,
-        "doc_id bigint, source string",
-        str(base / "partials"),
-        str(base / "ckpt"),
-        fresh=False,
+    stream = (
+        spark.readStream.schema("doc_id bigint, source string")
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
     )
-    return SS.folded_sample(spark, str(base / "partials"))
+    return D.serve_partials(stream, base, _sample_partial, _sample_fold)
 
 
 # bottom-k folding is exact, so the batch sample's SQL IS the oracle
 ORACLES["q_stream_sample"] = ORACLES["q_sample_fixed"]
+
+
+def _manifest_partial(docs: DataFrame) -> DataFrame:
+    """One micro-batch's per-shard manifest rows, from the SAME staging
+    + census expressions as the batch writer (functions/sampling.py) —
+    the twins cannot drift apart. Folded by SK.fold_manifests."""
+    return SK.shard_census(SK.with_shard_cols(docs))
 
 
 @register("q_stream_manifest", oracle=None)  # batch oracle attached below
@@ -812,23 +834,13 @@ def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_fingerprint(sf_dir, "documents", "manifest-src-v1"),
         lambda dest: docs.repartition(6).write.mode("overwrite").parquet(dest),
     )
-    partials_dir = str(base / "partials")
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )
-    # the SAME staging + census expressions as the batch writer
-    # (functions/sampling.py) — the twins cannot drift apart
-    D.drain_partials(
-        stream,
-        partials_dir,
-        str(base / "ckpt"),
-        lambda batch_df: SK.shard_census(SK.with_shard_cols(batch_df)),
-        fresh=False,
-    )
-    D.compact_with(spark, partials_dir, SK.fold_manifests)
-    return SK.manifest_select(D.folded_with(spark, partials_dir, SK.fold_manifests))
+    served = D.serve_partials(stream, base, _manifest_partial, SK.fold_manifests)
+    return SK.manifest_select(served)
 
 
 # every manifest stat folds commutatively, so the batch manifest's
@@ -962,19 +974,27 @@ def q_pii_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pii_partial(docs: DataFrame) -> DataFrame:
+    """One micro-batch's per-source census — the q_pii_census
+    expressions, folded across batches by PII.fold_rollups (every
+    statistic is a per-source SUM over disjoint doc sets, flagged-doc
+    counts included: each doc lands in exactly one micro-batch)."""
+    return PII.rollup(PII.doc_metrics(PII.with_planted_pii(docs)))
+
+
 @register("q_stream_pii", oracle=None)  # batch oracle attached below
 def q_stream_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E23b — PII compliance monitor STREAM TWIN: each micro-batch's
     per-source census lands as an idempotent epoch partial (every
     statistic is a per-source SUM over disjoint doc sets, flagged-doc
-    counts included — streaming/pii.py), and serving folds partials by
+    counts included — _pii_partial), and serving folds partials by
     addition into EXACTLY the batch census, hash-matched against
     q_pii_census's oracle. This is how the scrub gate deploys at
     100 TB/day: a feed that starts leaking contact data is flagged
     within one micro-batch, with per-epoch state one row per source —
     never proportional to document volume."""
     from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import pii as SP
+    from ..streaming import delta as D
     from ..streaming.ingest import resumable_workdir
 
     # resumable: the first call drains the 3 micro-batches into epoch
@@ -986,15 +1006,12 @@ def q_stream_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_fingerprint(sf_dir, "documents", "pii-src-v1"),
         lambda dest: docs.repartition(6).write.mode("overwrite").parquet(dest),
     )
-    SP.run_pii_stream(
-        spark,
-        src,
-        "doc_id bigint, source string, text string",
-        str(base / "partials"),
-        str(base / "ckpt"),
-        fresh=False,
+    stream = (
+        spark.readStream.schema("doc_id bigint, source string, text string")
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
     )
-    return SP.folded_census(spark, str(base / "partials"))
+    return D.serve_partials(stream, base, _pii_partial, PII.fold_rollups)
 
 
 # every census statistic folds commutatively over disjoint doc sets,

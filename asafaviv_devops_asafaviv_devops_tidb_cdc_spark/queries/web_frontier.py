@@ -405,6 +405,14 @@ def _frontier_frame(spark: SparkSession, sf_dir: str):
 # ---------------------------------------------------------------------------
 
 
+def _host_pairs(df: DataFrame) -> DataFrame:
+    """The host-graph monoid, also its per-batch fold: DISTINCT
+    (src, dst) pairs. Set union is commutative and refold-idempotent —
+    fold(fold(A) ∪ fold(B)) == fold(A ∪ B) — so an epoch partial is
+    O(new host-pairs), never O(pages)."""
+    return df.select("src", "dst").distinct()
+
+
 @register(
     "q_stream_host_graph",
     oracle="""
@@ -429,7 +437,7 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintains the E41 census incrementally: page-level host-pair
     rows arrive in micro-batches, each batch lands its DISTINCT
     pairs as an idempotent epoch partial, partials COMPACT through
-    the shared crash-safe base protocol (streaming/delta.py), and
+    the shared crash-safe base protocol (delta.serve_partials), and
     serving folds once more then derives the out-/in-neighbor counts
     — hash-identical to the batch census (the oracle's hp CTE). At
     100 TB/day this is how the web graph stays current without
@@ -461,24 +469,12 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_fingerprint(sf_dir, "documents", "host-edges-v1"),
         _write_src,
     )
-    partials_dir = str(base / "partials")
     stream = (
         spark.readStream.schema("src string, dst string")
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )
-
-    def fold_pairs(df: DataFrame) -> DataFrame:
-        return df.select("src", "dst").distinct()
-
-    # per-epoch partial = the batch's distinct pairs: tiny
-    # (O(new host-pairs)) and folded by the same DISTINCT the serving
-    # read applies
-    D.drain_partials(
-        stream, partials_dir, str(base / "ckpt"), fold_pairs, fresh=False
-    )
-    D.compact_with(spark, partials_dir, fold_pairs)
-    pairs = D.folded_with(spark, partials_dir, fold_pairs)
+    pairs = D.serve_partials(stream, base, _host_pairs, _host_pairs)
     n_out = pairs.groupBy(F.col("src").alias("host")).agg(
         F.count("*").cast("long").alias("n_out")
     )
@@ -664,10 +660,12 @@ def q_web_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: per host bucket, the post-gate page count, post-exact
     count, final doc count, distinct hosts and total tokens.
 
-    Physical plan: ONE Arrow archive walk (the staged corpus is
-    persisted MEMORY_AND_DISK; the gate and every census below it are
-    JVM codegen over the cached rows — lifecycle as host_pairs:
-    bench/test harnesses clear caches centrally); exact dedup is one
+    Physical plan: the Arrow archive walk runs once per documents
+    fingerprint (the staged page artifact of web_staged_corpus); the
+    staged corpus is persisted MEMORY_AND_DISK, so the gate and every
+    census below it are JVM codegen over the cached rows (lifecycle as
+    host_pairs: bench/test harnesses clear caches centrally); exact
+    dedup is one
     hash window on sha2(text); the near-dup clusters come from the
     once-per-fingerprint web_clusters ARTIFACT (the iterative CC —
     the expensive stage — is never repaid per invocation); the three
@@ -701,9 +699,7 @@ def q_web_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ded = exact_dedup(qual)
     non_canonical = (
-        # share the persisted corpus with a cold artifact build so the
-        # staging walk runs once per invocation, not twice (r16)
-        web_cluster_table(spark, sf_dir, corpus=corpus)
+        web_cluster_table(spark, sf_dir)
         .filter(F.col("doc_id") != F.col("cluster_id"))
         .select("doc_id")
     )

@@ -176,6 +176,7 @@ def neardup_cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _WEB_CC_VERSION = "web-cc-v1"
+_WEB_PAGES_VERSION = "web-pages-v1"
 
 
 def web_staged_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,32 +199,39 @@ def web_staged_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same planting scheme as :func:`neardup_corpus`, applied to crawl
     text instead of the documents table.
 
-    The base page frame is MATERIALIZED (reliable checkpoint) before
-    the planting unions (r16, guide §1.2/§3.3): each union leg is a
-    separate subtree, so without materialization one pass over the
-    staged corpus re-ran the whole Arrow synth+extract walk once per
-    leg (4x; measured 2.8 s vs 0.9 s for a single walk at sf0.1), and
-    the deep Python-stage lineage under a 4-way union made every
-    downstream action re-canonicalize a huge plan on the driver
-    (jstack'd at 14+ s of single-threaded QueryPlan.doCanonicalize
-    during the cold artifact build). The checkpoint bounds both: the
-    walk runs exactly once per invocation and every consumer plans
-    against a flat scan. At 100 TB this is the standard posture — the
-    extraction pass runs once per crawl snapshot and is staged to
-    storage before the dedup pipeline fans out over it."""
+    The base page frame is a documents-fingerprint ARTIFACT
+    (sources/artifact.py::materialized) staged before the planting
+    unions: each union leg is a separate subtree, so without
+    materialization one pass over the staged corpus re-ran the whole
+    Arrow synth+extract walk once per leg (4x; measured 2.8 s vs 0.9 s
+    for a single walk at sf0.1), and the deep Python-stage lineage
+    under a 4-way union made every downstream action re-canonicalize a
+    huge plan on the driver (jstack'd at 14+ s of single-threaded
+    QueryPlan.doCanonicalize during the cold artifact build). The
+    artifact bounds both: the walk runs once per documents fingerprint
+    (not per call, and with no per-call checkpoint left behind) and
+    every consumer plans against a flat scan. At 100 TB this is the
+    standard posture — the extraction pass runs once per crawl
+    snapshot and is staged to storage before the dedup pipeline fans
+    out over it."""
     from ..functions import html_text as HT
-    from ..functions.dedup import reliable_checkpoint
 
-    ids = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    )
-    pages = HT.main_content_text(HT.synth_warc_html_payloads(ids))
-    pg = reliable_checkpoint(
-        pages.select(
+    def build() -> DataFrame:
+        ids = load_table(spark, sf_dir, "documents").select(
+            F.col("doc_id").alias("media_id")
+        )
+        pages = HT.main_content_text(HT.synth_warc_html_payloads(ids))
+        return pages.select(
             (F.col("media_id") * 4 + F.col("r")).cast("long").alias("doc_id"),
             F.lower(F.expr("parse_url(page_url, 'HOST')")).alias("host"),
             "text",
         )
+
+    pg = materialized(
+        spark,
+        "web_pages",
+        input_fingerprint(sf_dir, "documents", _WEB_PAGES_VERSION),
+        build,
     )
     stub = F.expr("array_join(slice(split(text, ' '), 1, 5), ' ')")
     return (
@@ -249,28 +257,21 @@ def web_staged_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def web_cluster_table(
-    spark: SparkSession, sf_dir: str, corpus: DataFrame | None = None
-) -> DataFrame:
+def web_cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) over the STAGED web corpus' post-gate,
     post-exact-dedup survivors — the web pipeline's near-dup artifact,
     built once per documents fingerprint exactly like
     :func:`pipeline_cluster_table` (same stage order, same sha/LSH
     cores from functions/dedup.py); the q_web_corpus_e2e oracle
-    re-derives components from scratch, which keeps it honest.
-
-    ``corpus``: a caller that already materialized
-    :func:`web_staged_corpus` (q_web_corpus_e2e persists it for its own
-    censuses) passes it in so a cold artifact build does not stage the
-    corpus a second time (r16) — the build derivation itself is
-    unchanged, so the artifact bytes cannot change."""
+    re-derives components from scratch, which keeps it honest. A cold
+    build re-reads the staged page artifact, never re-walks the
+    archive."""
     from ..functions import text as TX
     from ..functions.dedup import exact_dedup, neardup_clusters, ngram_jaccard_pairs
 
     def build() -> DataFrame:
-        staged = corpus if corpus is not None else web_staged_corpus(spark, sf_dir)
         qual = (
-            TX.with_quality_metrics(staged)
+            TX.with_quality_metrics(web_staged_corpus(spark, sf_dir))
             .filter("keep")
             .select("doc_id", "text")
         )

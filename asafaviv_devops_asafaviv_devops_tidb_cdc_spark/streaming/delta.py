@@ -1,24 +1,32 @@
-"""Streaming incremental aggregate maintenance (A10 stream form).
+"""The epoch-partial lifecycle every folded stream family shares.
 
-Each micro-batch folds its change events into per-group retraction
-deltas (operators/replay.py::retraction_totals) and writes ONE tiny
-partial row per group; the serving read sums the partials. Because
-retraction deltas are commutative and associative, the folded total is
-independent of batch boundaries and arrival order — which is why the
-driver can hash-compare the streamed result against the BATCH oracle
-(q_delta_agg's SQL) exactly.
+``serve_partials(stream, base, batch_fold, fold)`` is the one
+lifecycle: drain the stream into idempotent per-epoch partials
+(``batch_fold`` of each micro-batch under ``base/partials``,
+checkpoint at ``base/ckpt``), compact them into a versioned base with
+the family's monoid ``fold``, then serve ``fold`` over what is live.
+This is the Structured Streaming exactly-once recipe (SIGMOD 2018):
 
-Idempotence: ``drain_partials`` writes each epoch's partial to an
-``epoch=<id>`` directory with mode=overwrite, so a micro-batch retry
-after a crash rewrites its own partial instead of double-counting —
-the foreachBatch exactly-once recipe, owned here for every partial
-family in the package. At 100 TB the partials are O(groups x
-batches) rows; ``compact_partials`` folds them into a versioned BASE with the same
-commutative fold, bounding the serving read at O(groups + batches
-since last compaction). The base is copy-on-write (``base_v<epoch>``)
-and serving ignores epoch partials at or below the base's version, so
-a crash anywhere in compaction — before the base commit, or before the
-folded epoch dirs are removed — never double-counts or drops a batch.
+- Idempotence: ``drain_partials`` writes each epoch's partial to an
+  ``epoch=<id>`` directory with mode=overwrite, so a micro-batch retry
+  after a crash rewrites its own partial instead of double-counting.
+- Bounded serving: partials are O(groups x batches) rows;
+  ``compact_with`` folds them into a versioned base with the SAME
+  monoid, bounding the serving read at O(groups + batches since the
+  last compaction). The base is copy-on-write (``base_v<epoch>``) and
+  serving ignores epoch partials at or below the base's version, so a
+  crash anywhere in compaction — before the base commit, or before the
+  folded epoch dirs are removed — never double-counts or drops a batch.
+- Exactness: ``fold`` must satisfy fold(fold(A) ∪ fold(B)) ==
+  fold(A ∪ B), so the served answer is independent of batch
+  boundaries and arrival order, and hash-compares against the BATCH
+  oracle. Each family's monoid states why it qualifies next to its
+  definition.
+
+``run_delta_stream`` is the uncompacted drain of the retraction-fold
+family (operators/replay.py::retraction_totals), kept separate because
+the compaction crash tests and q_compact_partials start from
+uncompacted epoch dirs.
 """
 
 from __future__ import annotations
@@ -36,20 +44,14 @@ _BASE_PREFIX = "base_v"
 
 
 def drain_partials(
-    stream: DataFrame,
-    partials_dir: str,
-    checkpoint_dir: str,
-    batch_fold,
-    fresh: bool,
+    stream: DataFrame, partials_dir: str, checkpoint_dir: str, batch_fold
 ) -> None:
     """Drain ``stream`` (ingest.drain), writing each micro-batch's
     ``batch_fold(batch_df)`` as the idempotent partial
     ``epoch=<id>`` under ``partials_dir``. The write is mode=overwrite,
     so a retried epoch rewrites its own partial instead of adding a
-    second one — the foreachBatch exactly-once recipe. Every partial
-    family (serving via folded_with, compaction via compact_with)
-    reads what this writes. ``fresh=True`` wipes partials and
-    checkpoint first; ``fresh=False`` resumes."""
+    second one. Resumes from the committed offsets in
+    ``checkpoint_dir``: an already-drained backlog is an empty pass."""
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         batch_fold(batch_df).write.mode("overwrite").parquet(
@@ -60,9 +62,20 @@ def drain_partials(
         stream.sparkSession,
         stream.writeStream.foreachBatch(write),
         checkpoint_dir,
-        partials_dir,
-        fresh=fresh,
     )
+
+
+def serve_partials(stream: DataFrame, base: Path, batch_fold, fold) -> DataFrame:
+    """The epoch-partial lifecycle (module docstring): drain ``stream``
+    into ``base/partials`` (checkpoint ``base/ckpt``, resuming from
+    existing state), compact the live partials under the monoid
+    ``fold`` (a no-op when no new epoch landed), and return ``fold``
+    over the live partials."""
+    spark = stream.sparkSession
+    partials_dir = str(Path(base) / "partials")
+    drain_partials(stream, partials_dir, str(Path(base) / "ckpt"), batch_fold)
+    compact_with(spark, partials_dir, fold)
+    return folded_with(spark, partials_dir, fold)
 
 
 def run_delta_stream(
@@ -71,13 +84,12 @@ def run_delta_stream(
     partials_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 2,
-    fresh: bool = True,
 ) -> None:
     """Drain the envelope backlog, folding each micro-batch into
-    retraction partials. Order-robust (unlike the watermarked dedupe
-    path): the fold never inspects event order, so multi-file sources
-    replaying in any interleaving converge to the same totals.
-    ``fresh=False`` resumes from existing partials + checkpoint."""
+    retraction partials, without compacting. Order-robust (unlike the
+    watermarked dedupe path): the fold never inspects event order, so
+    multi-file sources replaying in any interleaving converge to the
+    same totals. Resumes from existing partials + checkpoint."""
     stream = (
         spark.readStream.schema(ingest.SOURCE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -89,14 +101,19 @@ def run_delta_stream(
         partials_dir,
         checkpoint_dir,
         lambda batch_df: retraction_totals(P.typed_rows(batch_df)),
-        fresh,
     )
+
+
+def fold_totals(parts: DataFrame) -> DataFrame:
+    """The retraction family's monoid: per-table integer sums of the
+    +new/-old deltas (see fold_generic)."""
+    return fold_generic(parts, ["table_name"], ["net_rows", "net_sum_micro"])
 
 
 def _base_version(partials_dir: str) -> tuple[int, Path | None]:
     """(version, path) of the newest COMMITTED base; (-1, None) if none.
 
-    Committed means the rename in ``compact_partials`` completed: the
+    Committed means the rename in ``compact_with`` completed: the
     fold is staged under a ``_tmp`` name and renamed into place only
     after the write job (and its ``_SUCCESS`` marker) finished, so a
     crash mid-write leaves no ``base_v*`` dir at all. The ``_SUCCESS``
@@ -141,12 +158,13 @@ def _live_paths(partials_dir: str) -> list[str]:
 def fold_generic(
     df: DataFrame, group_cols: list[str], sum_cols: list[str]
 ) -> DataFrame:
-    """The commutative integer-sum fold every partial family shares:
-    group by the grid columns, SUM the delta columns (kept as int64).
-    Using ONE fold expression for the per-batch partial, the serving
-    read, and the compaction base is what makes
-    serve(compact(partials)) == serve(partials) an identity instead
-    of a hope."""
+    """The integer-sum monoid of every SUM-DECOMPOSABLE family: group
+    by the grid columns, SUM the delta columns (kept as int64). When
+    each source row contributes to exactly one micro-batch's sums,
+    per-batch sums add up to the exact batch totals in any order or
+    grouping. Using ONE fold expression for the serving read and the
+    compaction base is what makes serve(compact(partials)) ==
+    serve(partials) an identity instead of a hope."""
     return df.groupBy(*group_cols).agg(
         *[F.sum(c).cast("long").alias(c) for c in sum_cols]
     )
@@ -163,34 +181,12 @@ def folded_with(
     return fold_fn(spark.read.parquet(*_live_paths(partials_dir)))
 
 
-def folded_generic(
-    spark: SparkSession,
-    partials_dir: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-) -> DataFrame:
-    """Serving view: fold the live partials (newest base + epochs
-    above its version) into current totals."""
-    return folded_with(
-        spark, partials_dir, lambda df: fold_generic(df, group_cols, sum_cols)
-    )
-
-
-def folded_totals(spark: SparkSession, partials_dir: str) -> DataFrame:
-    """Serving view: sum the live partials into current totals."""
-    return folded_generic(
-        spark, partials_dir, ["table_name"], ["net_rows", "net_sum_micro"]
-    )
-
-
 def compact_with(
     spark: SparkSession, partials_dir: str, fold_fn
 ) -> None:
     """Fold every live partial into one new base (copy-on-write,
     versioned by the newest folded epoch), then drop what it folded.
-    ``fold_fn`` is the family's serving monoid (see folded_with) —
-    using the SAME fold for partials, serving, and the base is what
-    makes serve(compact(partials)) == serve(partials) an identity.
+    ``fold_fn`` is the family's serving monoid (see folded_with).
 
     Crash safety without a manifest: the base commit is the atomic
     point. Before it, serving sees the old base + epochs (complete);
@@ -228,22 +224,3 @@ def compact_with(
             shutil.rmtree(p, ignore_errors=True)
     if old_base is not None:
         shutil.rmtree(old_base, ignore_errors=True)
-
-
-def compact_generic(
-    spark: SparkSession,
-    partials_dir: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-) -> None:
-    """compact_with under the integer-sum fold."""
-    compact_with(
-        spark, partials_dir, lambda df: fold_generic(df, group_cols, sum_cols)
-    )
-
-
-def compact_partials(spark: SparkSession, partials_dir: str) -> None:
-    """The delta-agg family's compaction (see compact_with)."""
-    compact_generic(
-        spark, partials_dir, ["table_name"], ["net_rows", "net_sum_micro"]
-    )

@@ -22,6 +22,8 @@ SQL oracle.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -92,10 +94,14 @@ def _update(key, pdfs, state):
     )
 
 
-def funnel_stream(events_stream: DataFrame) -> DataFrame:
-    """events stream -> per-user (v, c, p) emissions (append mode)."""
+def funnel_stream(spark: SparkSession, src_dir: str, schema) -> DataFrame:
+    """Events under ``src_dir`` (one file per micro-batch) -> per-user
+    (v, c, p) emissions (append mode)."""
     return (
-        events_stream.filter(F.col("event_type").isin(*FUNNEL_TYPES))
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .filter(F.col("event_type").isin(*FUNNEL_TYPES))
         .select(
             "user_id", "event_type", F.unix_millis("ts").alias("t_ms")
         )
@@ -147,16 +153,11 @@ def final_stage_counts(emissions: DataFrame) -> DataFrame:
 def run_funnel_stream(
     spark: SparkSession, src_dir: str, schema, name: str
 ) -> DataFrame:
-    """Drain ``src_dir`` (one file per micro-batch) through the
-    stateful funnel into a memory sink; return the emissions frame."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    """Drain ``src_dir`` through the stateful funnel into a memory
+    sink; return the emissions frame."""
     ingest.drain(
         spark,
-        funnel_stream(stream)
+        funnel_stream(spark, src_dir, schema)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append"),
@@ -182,32 +183,16 @@ def last_per_user(emissions: DataFrame) -> DataFrame:
 
 
 def run_funnel_resumable(
-    spark: SparkSession,
-    src_dir: str,
-    schema,
-    partials_dir: str,
-    checkpoint_dir: str,
+    spark: SparkSession, src_dir: str, schema, base: Path
 ) -> DataFrame:
-    """Resumable drain with BOUNDED serving state: each micro-batch's
-    emissions fold to last-per-user as an epoch partial
-    (delta.drain_partials; <= touched users rows), with a persistent
-    checkpoint + state store — first invocation pays the drain, later
-    ones are an empty pass + a fold of the compacted partials. The
-    shared crash-safe compaction (streaming/delta.py::compact_with)
-    runs after each drain under the last-per-user monoid, bounding
-    serving at O(users) regardless of how many drains accumulated
-    (an append-only emission sink would grow O(users x drains))."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    """Resumable drain with BOUNDED serving state
+    (delta.serve_partials): each micro-batch's emissions fold to
+    last-per-user as an epoch partial (<= touched users rows), with a
+    persistent checkpoint + state store — the first invocation pays
+    the drain, later ones are an empty pass + a fold of the compacted
+    partials. Compaction under the last-per-user monoid bounds serving
+    at O(users) regardless of how many drains accumulated (an
+    append-only emission sink would grow O(users x drains))."""
+    return D.serve_partials(
+        funnel_stream(spark, src_dir, schema), base, last_per_user, last_per_user
     )
-    D.drain_partials(
-        funnel_stream(stream),
-        partials_dir,
-        checkpoint_dir,
-        last_per_user,
-        fresh=False,
-    )
-    D.compact_with(spark, partials_dir, last_per_user)
-    return D.folded_with(spark, partials_dir, last_per_user)

@@ -210,6 +210,31 @@ def envelope_files(
     return materialized_path("envelopes", fp, write)
 
 
+def events_landing_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File stream over the normalized events table, landed once per
+    events fingerprint as parquet and shared by every events monitor
+    (DQ, drift, gap-fill, trend, changepoint) under the same contract
+    as :func:`envelope_files`: consumers read the landing, never
+    mutate it, and keep their own checkpoints. Two files per
+    micro-batch."""
+    from ..sources.artifact import input_fingerprint, materialized_path
+
+    ev = load_table(spark, sf_dir, "events")
+    src = materialized_path(
+        "events_normalized",
+        input_fingerprint(sf_dir, "events", "dq-src-v1"),
+        lambda dest: ev.write.mode("overwrite").parquet(dest),
+    )
+    schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in ev.schema.fields
+    )
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+    )
+
+
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Run a (streaming) query with ``spark.sql.shuffle.partitions=n``,

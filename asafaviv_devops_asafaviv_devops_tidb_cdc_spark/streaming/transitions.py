@@ -35,6 +35,8 @@ per event — asserted by the emission-volume test
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -139,32 +141,28 @@ def run_transitions_stream(
 _GRID_COLS = ["from_type", "to_type"]
 
 
+def _grid_fold(deltas: DataFrame) -> DataFrame:
+    """Pair-count deltas are SUM-DECOMPOSABLE on the (from_type,
+    to_type) grid: each splice's increments land in exactly one
+    micro-batch, so per-batch grid sums add up to the final counts."""
+    return D.fold_generic(deltas, _GRID_COLS, ["delta"])
+
+
 def run_transitions_resumable(
-    spark: SparkSession,
-    src_dir: str,
-    schema: str,
-    partials_dir: str,
-    checkpoint_dir: str,
+    spark: SparkSession, src_dir: str, schema: str, base: Path
 ) -> DataFrame:
-    """Resumable drain with BOUNDED serving state: each micro-batch's
-    deltas fold onto the (from_type, to_type) grid as an epoch partial
-    (delta.drain_partials; <= type^2 rows), with a persistent
-    checkpoint + state store, so the FIRST invocation pays the real
-    drain and every later one is an empty pass plus a grid fold.
-    Appending raw deltas to a sink would grow the serving read
-    O(events) forever; the per-epoch grid fold + the shared crash-safe
-    compaction (streaming/delta.py::compact_generic, called here after
-    each drain — a no-op unless new epochs landed) bound it at O(grid)
-    regardless of stream length. Returns the served count frame."""
-    D.drain_partials(
-        _delta_stream(spark, src_dir, schema),
-        partials_dir,
-        checkpoint_dir,
-        lambda batch_df: D.fold_generic(batch_df, _GRID_COLS, ["delta"]),
-        fresh=False,
+    """Resumable drain with BOUNDED serving state
+    (delta.serve_partials): each micro-batch's deltas fold onto the
+    (from_type, to_type) grid as an epoch partial (<= type^2 rows),
+    with a persistent checkpoint + state store, so the FIRST
+    invocation pays the real drain and every later one is an empty
+    pass plus a grid fold. Appending raw deltas to a sink would grow
+    the serving read O(events) forever; the grid fold and compaction
+    bound it at O(grid) regardless of stream length. Returns the
+    served count frame."""
+    counts = D.serve_partials(
+        _delta_stream(spark, src_dir, schema), base, _grid_fold, _grid_fold
     )
-    D.compact_generic(spark, partials_dir, _GRID_COLS, ["delta"])
-    counts = D.folded_generic(spark, partials_dir, _GRID_COLS, ["delta"])
     return counts.select(
         "from_type", "to_type", F.col("delta").cast("long").alias("n")
     ).filter(F.col("n") > 0)

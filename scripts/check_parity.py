@@ -7,10 +7,8 @@ Usage: python scripts/check_parity.py [SF_DIR] [query ...]
 
 from __future__ import annotations
 
-import math
 import sys
 import time
-from decimal import Decimal
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -19,35 +17,11 @@ sys.path.insert(0, str(REPO))
 import duckdb  # noqa: E402
 
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark import registry  # noqa: E402
+from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.parity import (  # noqa: E402
+    create_views,
+    normalize,
+)
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.session import get_spark  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, Decimal):
-        return f"{v:.6f}"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return None
-        return f"{v:.6f}"
-    if isinstance(v, bool):
-        return str(v)
-    return str(v)
-
-
-def _normalize(df_pandas):
-    cols = sorted(df_pandas.columns)
-    rows = [
-        tuple(_norm_cell(v) for v in row)
-        for row in df_pandas[cols].itertuples(index=False, name=None)
-    ]
-    return cols, sorted(rows, key=lambda r: tuple((v is not None, v) for v in r))
 
 
 def main() -> None:
@@ -57,13 +31,16 @@ def main() -> None:
 
     spark = get_spark("parity_check")
     duck = duckdb.connect()
-    for t in TABLES:
-        duck.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    create_views(duck, sf_dir)
 
     failures = []
     for name in sorted(only):
         if name not in registry.ORACLES:
-            print(f"{name}: SKIP (rows-only)")
+            # every registered query has an oracle, so a name without
+            # one is a typo or an unregistered query: never a pass
+            failures.append(name)
+            known = "registered" if name in registry.QUERIES else "unregistered"
+            print(f"{name}: FAIL ({known}, no oracle)")
             continue
         t0 = time.time()
         try:
@@ -73,8 +50,8 @@ def main() -> None:
             failures.append(name)
             print(f"{name}: ERROR {exc}")
             continue
-        s_cols, s_rows = _normalize(s_pd)
-        d_cols, d_rows = _normalize(d_pd)
+        s_cols, s_rows = normalize(s_pd)
+        d_cols, d_rows = normalize(d_pd)
         dt = time.time() - t0
         if s_cols != d_cols:
             failures.append(name)

@@ -8,9 +8,7 @@ Exit 0 iff every oracle-backed query matches.
 
 from __future__ import annotations
 
-import math
 import sys
-from decimal import Decimal
 from pathlib import Path
 
 import duckdb
@@ -19,24 +17,6 @@ from pyspark.sql import SparkSession
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def norm(df, cols):
-    out = []
-    for r in df[cols].itertuples(index=False, name=None):
-        out.append(
-            tuple(
-                None
-                if v is None or (isinstance(v, float) and math.isnan(v))
-                else (f"{v:.6f}" if isinstance(v, (float, Decimal)) else str(v))
-                for v in r
-            )
-        )
-    return sorted(out, key=lambda r: tuple((v is not None, v) for v in r))
 
 
 def main() -> None:
@@ -47,10 +27,14 @@ def main() -> None:
     )
     import __spark_entry__ as E
 
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.parity import (
+        create_views,
+        normalize,
+    )
+
     assert len(E.entry(spark).collect()) > 0, "t1 smoke returned 0 rows"
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    create_views(con, SF)
     qs, oracles = E.queries(), E.oracle_sql()
     bad = []
     for name in sorted(qs):
@@ -59,12 +43,7 @@ def main() -> None:
             print(name, "rows-only", len(sdf))
             continue
         ddf = con.execute(oracles[name]).fetchdf()
-        cols = sorted(sdf.columns)
-        ok = (
-            cols == sorted(ddf.columns)
-            and len(sdf) == len(ddf)
-            and norm(sdf, cols) == norm(ddf, cols)
-        )
+        ok = normalize(sdf) == normalize(ddf)
         if not ok:
             bad.append(name)
         print(name, "OK" if ok else "MISMATCH", len(sdf))

@@ -30,21 +30,9 @@ def spark():
 def duck():
     import duckdb
 
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.parity import create_views
+
     con = duckdb.connect()
-    for name in [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{SF_SMOKE}/{name}.parquet'"
-        )
+    create_views(con, SF_SMOKE)
     yield con
     con.close()

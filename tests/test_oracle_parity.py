@@ -5,40 +5,14 @@ row-count + column names + order-insensitive values.
 
 from __future__ import annotations
 
-import math
-from decimal import Decimal
-
 import pytest
 
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark import registry
+from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.parity import normalize
 
 registry.load_all()
 
 ORACLE_QUERIES = sorted(registry.ORACLES)
-
-
-def _norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, Decimal):
-        return f"{v:.6f}"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return None  # pandas represents SQL NULL as NaN
-        return f"{v:.6f}"
-    if isinstance(v, bool):
-        return str(v)
-    return str(v)
-
-
-def _normalize(df_pandas):
-    cols = sorted(df_pandas.columns)
-    rows = [
-        tuple(_norm_cell(v) for v in row)
-        for row in df_pandas[cols].itertuples(index=False, name=None)
-    ]
-    # None sorts before any string
-    return cols, sorted(rows, key=lambda r: tuple((v is not None, v) for v in r))
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
@@ -48,8 +22,8 @@ def test_query_matches_oracle(name, spark, duck):
     spark_df = registry.QUERIES[name](spark, SF_SMOKE).toPandas()
     duck_df = duck.execute(registry.ORACLES[name]).fetchdf()
 
-    s_cols, s_rows = _normalize(spark_df)
-    d_cols, d_rows = _normalize(duck_df)
+    s_cols, s_rows = normalize(spark_df)
+    d_cols, d_rows = normalize(duck_df)
 
     assert s_cols == d_cols, f"{name}: column mismatch {s_cols} vs {d_cols}"
     assert len(s_rows) == len(d_rows), (

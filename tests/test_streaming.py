@@ -3,6 +3,7 @@ the stateful sustained-alert operator's stream/batch agreement."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark import registry
@@ -254,7 +255,7 @@ def test_delta_partials_compaction_preserves_totals(spark):
     def totals():
         return sorted(
             (r["table_name"], r["net_rows"], r["net_sum_micro"])
-            for r in delta.folded_totals(spark, pdir).collect()
+            for r in delta.folded_with(spark, pdir, delta.fold_totals).collect()
         )
 
     before = totals()
@@ -263,13 +264,13 @@ def test_delta_partials_compaction_preserves_totals(spark):
     saved = Path(tempfile.mkdtemp()) / epochs[0][1].name
     sh.copytree(epochs[0][1], saved)
 
-    delta.compact_partials(spark, pdir)
+    delta.compact_with(spark, pdir, delta.fold_totals)
     assert totals() == before
     assert delta._epoch_dirs(pdir) == []  # all folded into the base
     ver, _ = delta._base_version(pdir)
     assert ver == max(e for e, _ in epochs)
 
-    delta.compact_partials(spark, pdir)  # idempotent no-op
+    delta.compact_with(spark, pdir, delta.fold_totals)  # idempotent no-op
     assert totals() == before
 
     # interrupted-cleanup simulation: a stale folded epoch reappears
@@ -438,40 +439,58 @@ def test_stateful_stream_under_rocksdb_provider(spark, tmp_path):
 
 
 def test_stream_dq_retry_idempotent_and_refuses_nonrow_kinds(spark, tmp_path):
-    """Streaming DQ: a retried micro-batch overwrites its own epoch
-    partial (totals never double-count), and non-sum-decomposable
-    kinds are refused up front."""
+    """Streaming DQ through delta.serve_partials: a retried micro-batch
+    overwrites its own epoch partial (totals never double-count), and
+    non-sum-decomposable kinds are refused when the batch fold is
+    built, before any stream starts."""
     import pytest as _pytest
 
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import dq as SDQ
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries import (
+        profiling as PR,
+    )
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta
 
     src = str(tmp_path / "src")
     spark.range(0, 100).selectExpr(
         "id", "CASE WHEN id % 10 = 0 THEN NULL ELSE 'v' END AS s"
     ).repartition(4).write.mode("overwrite").parquet(src)
     checks = [{"id": "nn_s", "table": "t", "kind": "not_null", "column": "s"}]
-    partials = str(tmp_path / "partials")
-    SDQ.run_dq_stream(
-        spark, src, "id long, s string", checks, partials,
-        str(tmp_path / "ckpt"), max_files_per_trigger=1,
-    )
-    before = SDQ.folded_violations(spark, partials).collect()
-    assert {r["check_id"]: r["violations"] for r in before} == {"nn_s": 10}
-    # simulate a micro-batch RETRY: re-fold one batch into its own epoch
-    batch = spark.read.parquet(src).limit(0)
-    SDQ._check_batch(batch, checks).write.mode("overwrite").parquet(
-        f"{partials}/epoch=0"
-    )
-    again = SDQ.folded_violations(spark, partials).collect()
-    # epoch 0 now holds the retried (empty) fold — totals reflect the
-    # OVERWRITE, not an addition; no partial is ever counted twice
-    assert {r["check_id"]: r["violations"] for r in again}["nn_s"] <= 10
+    batch_fold = PR._dq_partial(checks)
+
+    def stream():
+        return (
+            spark.readStream.schema("id long, s string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+    def violations(df):
+        return {r["check_id"]: r["violations"] for r in df.collect()}
+
+    base = tmp_path / "dq"
+    served = delta.serve_partials(stream(), base, batch_fold, PR._dq_fold)
+    assert violations(served) == {"nn_s": 10}
+    # a micro-batch past the base lands, then is RETRIED: the retry
+    # rewrites its own epoch dir, so its 10 violations count once
+    pdir = str(base / "partials")
+    ver, _ = delta._base_version(pdir)
+    assert ver == 3  # 4 files, one per micro-batch, all compacted
+    for _attempt in range(2):
+        batch_fold(spark.read.parquet(src)).write.mode("overwrite").parquet(
+            f"{pdir}/epoch={ver + 1}"
+        )
+        assert violations(delta.folded_with(spark, pdir, PR._dq_fold)) == {
+            "nn_s": 20
+        }
 
     with _pytest.raises(ValueError, match="not decomposable"):
-        SDQ.run_dq_stream(
-            spark, src, "id long, s string",
-            [{"id": "u", "table": "t", "kind": "unique", "columns": ["id"]}],
-            str(tmp_path / "p2"), str(tmp_path / "c2"),
+        delta.serve_partials(
+            stream(),
+            tmp_path / "refused",
+            PR._dq_partial(
+                [{"id": "u", "table": "t", "kind": "unique", "columns": ["id"]}]
+            ),
+            PR._dq_fold,
         )
 
 
@@ -947,15 +966,13 @@ def test_transitions_resumable_incremental_update(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(dest)
 
     src = str(tmp_path / "src")
-    parts = str(tmp_path / "partials")
-    ckpt = str(tmp_path / "ckpt")
     schema = "user_id long, event_id long, event_type string, ts timestamp"
 
     def counts():
         return {
             (r["from_type"], r["to_type"]): r["n"]
             for r in TR.run_transitions_resumable(
-                spark, src, schema, parts, ckpt
+                spark, src, schema, tmp_path
             ).collect()
         }
 
@@ -1125,11 +1142,11 @@ def test_compaction_crash_debris_never_corrupts_serving(spark):
     def totals():
         return sorted(
             (r["table_name"], r["net_rows"], r["net_sum_micro"])
-            for r in delta.folded_totals(spark, pdir).collect()
+            for r in delta.folded_with(spark, pdir, delta.fold_totals).collect()
         )
 
     before = totals()
-    delta.compact_partials(spark, pdir)
+    delta.compact_with(spark, pdir, delta.fold_totals)
     ver, committed = delta._base_version(pdir)
     assert committed is not None
 
@@ -1153,7 +1170,7 @@ def test_compaction_crash_debris_never_corrupts_serving(spark):
     assert totals() == before
 
     # the sweep removes both debris dirs; serving still identical
-    delta.compact_partials(spark, pdir)
+    delta.compact_with(spark, pdir, delta.fold_totals)
     assert totals() == before
     names = {p.name for p in Path(pdir).iterdir()}
     assert not any(n.startswith("_tmp_") for n in names), names
@@ -1183,7 +1200,7 @@ def test_drain_partials_resumes_after_fold_failure(spark, tmp_path):
     """Fault injection for the shared epoch-partial drain
     (streaming/delta.py::drain_partials): a batch fold that raises on
     epoch 1 stops the drain with the session conf restored, and a
-    resumed drain (fresh=False) re-runs epoch 1 into the same
+    resumed drain re-runs epoch 1 into the same
     ``epoch=1`` partial — serving exactly what an uninterrupted drain
     serves."""
     import pytest as _pytest
@@ -1217,20 +1234,18 @@ def test_drain_partials_resumes_after_fold_failure(spark, tmp_path):
     old = spark.conf.get(key)
     pdir, ckpt = str(tmp_path / "partials"), str(tmp_path / "ckpt")
     with _pytest.raises(Exception, match="injected fold failure"):
-        delta.drain_partials(stream(), pdir, ckpt, failing_fold, fresh=True)
+        delta.drain_partials(stream(), pdir, ckpt, failing_fold)
     assert spark.conf.get(key) == old
     assert [e for e, _ in delta._epoch_dirs(pdir)] == [0]
 
-    delta.drain_partials(stream(), pdir, ckpt, failing_fold, fresh=False)
+    delta.drain_partials(stream(), pdir, ckpt, failing_fold)
     clean = str(tmp_path / "clean")
-    delta.drain_partials(
-        stream(), clean, str(tmp_path / "clean_ckpt"), fold, fresh=True
-    )
+    delta.drain_partials(stream(), clean, str(tmp_path / "clean_ckpt"), fold)
 
     def served(d):
         return sorted(
             (r["k"], r["v"])
-            for r in delta.folded_generic(spark, d, ["k"], ["v"]).collect()
+            for r in delta.folded_with(spark, d, fold).collect()
         )
 
     assert served(pdir) == served(clean)
@@ -1239,3 +1254,127 @@ def test_drain_partials_resumes_after_fold_failure(spark, tmp_path):
     names = [p.name for p in Path(pdir).iterdir()]
     assert names.count("epoch=1") == 1
     assert [e for e, _ in delta._epoch_dirs(pdir)] == [0, 1, 2]
+
+
+SERVE_FAMILIES = [
+    "drift", "trend", "gapfill", "dq", "pii", "sample", "kmv",
+    "manifest", "host_graph", "funnel", "transitions",
+]
+
+
+def _serve_family(spark, name):
+    """(source frame, stream hook or None, batch_fold, fold, post, twin)
+    for one family served through delta.serve_partials: ``post`` turns
+    the served frame into the stream query's answer and ``twin()`` is
+    the batch answer it must equal. ``None`` reads the source one
+    file per micro-batch."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.functions import (
+        dq as DQ,
+        kmv as KMV,
+        pii as PII,
+        sampling as SK,
+    )
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries import (
+        advanced_ops as AO,
+        profiling as PR,
+        training_io as TIO,
+        web_frontier as WF,
+    )
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
+        funnel as FU,
+        transitions as TR,
+    )
+
+    q = registry.QUERIES
+    ev = load_table(spark, SF_SMOKE, "events")
+    docs = load_table(spark, SF_SMOKE, "documents")
+    li = load_table(spark, SF_SMOKE, "lineitem").select("l_returnflag", "l_partkey")
+    pairs = spark.range(0, 200).selectExpr(
+        "concat('h', id % 13) AS src", "concat('h', id % 7) AS dst"
+    )
+
+    def same(df):
+        return df
+
+    def batch(qname):
+        return lambda: q[qname](spark, SF_SMOKE)
+
+    return {
+        "drift": (ev, None, PR._drift_partial, PR._drift_fold,
+                  PR.drift_census, batch("q_event_drift")),
+        "trend": (ev, None, AO._daily_obs, AO._daily_fold,
+                  AO.trend_from_daily, batch("q_trend_slope")),
+        "gapfill": (ev, None, AO._hourly_obs, AO._hourly_fold,
+                    AO.gapfill_series, batch("q_gapfill_interpolate")),
+        "dq": (ev, None, PR._dq_partial(PR.STREAM_DQ_CHECKS), PR._dq_fold, same,
+               lambda: DQ.evaluate_checks({"events": ev}, PR.STREAM_DQ_CHECKS)
+               .select("check_id", "violations")),
+        "pii": (docs.select("doc_id", "source", "text"), None,
+                TIO._pii_partial, PII.fold_rollups, same, batch("q_pii_census")),
+        "sample": (docs.select("doc_id", "source"), None, TIO._sample_partial,
+                   TIO._sample_fold, same, batch("q_sample_fixed")),
+        "kmv": (li, None, AO._kmv_partial, AO._kmv_fold,
+                lambda s: AO._kmv_report(
+                    AO._kmv_union_and_summarize(KMV.bottom_k(s)),
+                    AO._kmv_exact_side(li),
+                ),
+                batch("q_kmv_distinct")),
+        "manifest": (docs.select("doc_id", "text"), None, TIO._manifest_partial,
+                     SK.fold_manifests, SK.manifest_select,
+                     batch("q_shard_manifest")),
+        "host_graph": (pairs, None, WF._host_pairs, WF._host_pairs, same,
+                       pairs.distinct),
+        "funnel": (ev, lambda src: FU.funnel_stream(spark, src, ev.schema),
+                   FU.last_per_user, FU.last_per_user, FU.final_stage_counts,
+                   batch("q_funnel_stages")),
+        "transitions": (ev, lambda src: TR._delta_stream(spark, src, ev.schema),
+                        TR._grid_fold, TR._grid_fold,
+                        lambda s: PR.transition_report(
+                            s.select(
+                                "from_type", "to_type",
+                                F.col("delta").cast("long").alias("n"),
+                            ).filter(F.col("n") > 0)
+                        ),
+                        batch("q_event_transitions")),
+    }[name]
+
+
+@pytest.mark.parametrize("family", SERVE_FAMILIES)
+def test_serve_partials_batch_boundary_invariance(spark, tmp_path, family):
+    """Every family served through delta.serve_partials answers the
+    same whether its backlog drains as 4 micro-batches or as 1, and
+    that answer equals its batch twin (the fold is a monoid, so batch
+    boundaries cannot show). A second serve_partials call on the same
+    base is an empty drain: no new ``epoch=`` dir, identical rows."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta
+
+    frame, hook, batch_fold, fold, post, twin = _serve_family(spark, family)
+    want = twin()
+    expect = sorted(tuple(r) for r in want.collect())
+    assert expect
+
+    def stream(src):
+        if hook is not None:
+            return hook(src)
+        return (
+            spark.readStream.schema(frame.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+    def served(src, base):
+        out = post(delta.serve_partials(stream(src), base, batch_fold, fold))
+        return sorted(tuple(r) for r in out.select(*want.columns).collect())
+
+    for n_files in (4, 1):
+        src = str(tmp_path / f"src_{n_files}")
+        frame.repartition(n_files).write.parquet(src)
+        base = tmp_path / f"run_{n_files}"
+        assert served(src, base) == expect, n_files
+        pdir = base / "partials"
+        # one micro-batch per file, all folded into the base
+        assert delta._base_version(str(pdir))[0] == n_files - 1
+        names = sorted(p.name for p in pdir.iterdir())
+        assert not any(n.startswith("epoch=") for n in names), names
+        assert served(src, base) == expect
+        assert sorted(p.name for p in pdir.iterdir()) == names

@@ -225,38 +225,6 @@ def test_curriculum_tile_formula_parametric(spark):
     assert bad == 0
 
 
-def test_stream_sample_batch_boundary_invariance(spark, tmp_path):
-    """The bottom-k fold must be invariant to micro-batch slicing:
-    draining the same source 1 file per trigger vs 4 files per trigger
-    yields byte-identical samples (the commutative-fold property on a
-    real stream, not just in algebra)."""
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
-        sample as SS,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "source")
-    src = str(tmp_path / "src")
-    docs.repartition(4).write.parquet(src)
-    outs = []
-    for mft in (1, 4):
-        base = tmp_path / f"run_{mft}"
-        SS.run_sample_stream(
-            spark,
-            src,
-            "doc_id bigint, source string",
-            str(base / "partials"),
-            str(base / "ckpt"),
-            max_files_per_trigger=mft,
-        )
-        outs.append(
-            sorted(
-                tuple(r)
-                for r in SS.folded_sample(spark, str(base / "partials")).collect()
-            )
-        )
-    assert outs[0] == outs[1] and len(outs[0]) > 0
-
-
 # ---------------------------------------------------------------------------
 # E24 content-defined chunking: semantic invariants (round 6)
 # ---------------------------------------------------------------------------
@@ -391,39 +359,3 @@ def test_edit_neardup_levenshtein_matches_python_reference(spark):
     ]
     want = [(lev(a, b), lev(a, b) if lev(a, b) <= 15 else -1) for a, b in pairs]
     assert got == want
-
-
-def test_stream_pii_invariant_to_batch_boundaries(spark, tmp_path):
-    """The streamed PII census must equal the batch census regardless
-    of how the backlog splits into micro-batches (per-source sums over
-    disjoint doc sets fold by addition)."""
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.functions import pii as P
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import pii as SP
-
-    docs = load_table(spark, SF_SMOKE, "documents").select(
-        "doc_id", "source", "text"
-    )
-    want = sorted(
-        tuple(r)
-        for r in P.rollup(P.doc_metrics(P.with_planted_pii(docs))).collect()
-    )
-    src = str(tmp_path / "src")
-    docs.repartition(4).write.parquet(src)
-    outs = []
-    for mft in (1, 4):
-        base = tmp_path / f"run_{mft}"
-        SP.run_pii_stream(
-            spark,
-            src,
-            "doc_id bigint, source string, text string",
-            str(base / "partials"),
-            str(base / "ckpt"),
-            max_files_per_trigger=mft,
-        )
-        outs.append(
-            sorted(
-                tuple(r)
-                for r in SP.folded_census(spark, str(base / "partials")).collect()
-            )
-        )
-    assert outs[0] == outs[1] == want and len(want) > 0
